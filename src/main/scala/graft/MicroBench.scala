@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc micro-benchmark harness for comparing alternative formulations
@@ -33,101 +33,7 @@ object MicroBench {
       d
     }
 
-    args.headOption.getOrElse("simhash") match {
-      case "simhash" =>
-        // warm
-        time("warm (60-agg)")(
-          TF.simhashSignatures(docs, "doc_id", "text").count())
-        (1 to 3).foreach { i =>
-          time(s"60-agg run $i")(
-            TF.simhashSignatures(docs, "doc_id", "text").count())
-        }
-        (1 to 3).foreach { i =>
-          time(s"explode-bit run $i")(simhashExplodeBits(docs).count())
-        }
-        TF.simhashSignatures(docs, "doc_id", "text").explain("formatted")
-      case "jaccard" =>
-        import graft.queries.PipelineQueries
-        time("warm full")(PipelineQueries.dedupNgramJaccard
-          .run(spark, sfDir).count())
-        (1 to 2).foreach(i => time(s"full run $i")(
-          PipelineQueries.dedupNgramJaccard.run(spark, sfDir).count()))
-        val base = docs
-          .select(col("doc_id"), TF.words(col("text")).as("ws"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"),
-            explode(array_distinct(TF.wordShingles(col("ws"), 3)))
-              .as("sh"))
-        (1 to 2).foreach(i => time(s"base only $i")(base.count()))
-        val ck = time("base checkpoint")(base.localCheckpoint(true))
-        (1 to 2).foreach { i =>
-          time(s"join+agg $i")(ck.as("a")
-            .join(ck.as("b"), col("a.sh") === col("b.sh") &&
-              col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("inter")).count())
-        }
-        val ckh = time("hashed checkpoint")(
-          base.select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-            .localCheckpoint(true))
-        (1 to 2).foreach { i =>
-          time(s"hashed join+agg $i")(ckh.as("a")
-            .join(ckh.as("b"), col("a.sh") === col("b.sh") &&
-              col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("inter")).count())
-        }
-      case "jachints" =>
-        val ck = docs
-          .select(col("doc_id"), TF.words(col("text")).as("ws"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"),
-            explode(array_distinct(TF.wordShingles(col("ws"), 3)))
-              .as("sh"))
-          .localCheckpoint(true)
-        def agg(j: DataFrame): Long = j
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("inter")).count()
-        val cond = (a: DataFrame, b: DataFrame) =>
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id")
-        time("warm default")(agg(ck.as("a").join(ck.as("b"),
-          cond(ck, ck))))
-        (1 to 2).foreach(i => time(s"default $i")(
-          agg(ck.as("a").join(ck.as("b"), cond(ck, ck)))))
-        (1 to 4).foreach(i => time(s"broadcast $i")(
-          agg(ck.as("a").join(broadcast(ck.as("b")), cond(ck, ck)))))
-        (1 to 4).foreach(i => time(s"shuffle_hash $i")(
-          agg(ck.as("a").join(ck.as("b").hint("shuffle_hash"),
-            cond(ck, ck)))))
-        val ckh = ck.select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-          .localCheckpoint(true)
-        (1 to 4).foreach(i => time(s"hash+shuffle_hash $i")(
-          agg(ckh.as("a").join(ckh.as("b").hint("shuffle_hash"),
-            cond(ckh, ckh)))))
-        ck.as("a").join(ck.as("b"), cond(ck, ck)).explain()
-      case "jacbucket" =>
-        val base = docs
-          .select(col("doc_id"), TF.words(col("text")).as("ws"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"),
-            explode(array_distinct(TF.wordShingles(col("ws"), 3)))
-              .as("sh"))
-        def bucketPairs(in: DataFrame, key: Column): DataFrame =
-          in.groupBy(key.as("k"))
-            .agg(sort_array(collect_list("doc_id")).as("ids"))
-            .filter(size(col("ids")) > 1)
-            .select(explode(expr(
-              """flatten(transform(ids, (x, i) ->
-                |  transform(slice(ids, i + 2, size(ids) - i - 1),
-                |    y -> struct(x AS d1, y AS d2))))""".stripMargin))
-              .as("p"))
-            .groupBy(col("p.d1"), col("p.d2"))
-            .agg(count(lit(1)).as("inter"))
-        time("warm bucket-str")(bucketPairs(base, col("sh")).count())
-        (1 to 2).foreach(i =>
-          time(s"bucket-str $i")(bucketPairs(base, col("sh")).count()))
-        (1 to 2).foreach(i => time(s"bucket-hash $i")(
-          bucketPairs(base, xxhash64(col("sh"))).count()))
+    args.headOption.getOrElse("q") match {
       case "minhash" =>
         import graft.queries.PipelineQueries
         time("warm full")(PipelineQueries.dedupMinhashLsh
@@ -173,37 +79,6 @@ object MicroBench {
         time("warm full")(PipelineQueries.annIvf.run(spark, sfDir).count())
         (1 to 2).foreach(i => time(s"full run $i")(
           PipelineQueries.annIvf.run(spark, sfDir).count()))
-      case "spanhints" =>
-        // span_dedup's verdict join: default planner choice vs the
-        // shuffle_hash hint used in the query (same question as jachints
-        // answered for the jaccard posting join).
-        import graft.functions.SignatureExprs
-        val base = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), TF.words(col("text")).as("ws"))
-          .filter(size(col("ws")) >= 5)
-          .select(col("doc_id"),
-            explode(array_distinct(
-              SignatureExprs.wordShingles(col("ws"), 5))).as("sp"))
-          .localCheckpoint(true)
-        def run(hinted: Boolean): Long = {
-          val freq = base.groupBy("sp").agg(count(lit(1)).as("nd"))
-          val f = if (hinted) freq.hint("shuffle_hash") else freq
-          base.join(f, "sp").groupBy("doc_id")
-            .agg(count(lit(1)).as("n"),
-              sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("s"))
-            .count()
-        }
-        time("warm")(run(true))
-        (1 to 3).foreach(i => time(s"shuffle_hash run $i")(run(true)))
-        (1 to 3).foreach(i => time(s"planner-default run $i")(run(false)))
-      case "ccrounds" =>
-        // Connected-components round count + per-round cost on the real
-        // simhash pair graph (q_dedup_cluster's input).
-        import graft.queries.PipelineQueries
-        time("warm cluster")(PipelineQueries.dedupCluster
-          .run(spark, sfDir).count())
-        (1 to 3).foreach(i => time(s"cluster run $i")(
-          PipelineQueries.dedupCluster.run(spark, sfDir).count()))
       case "q" =>
         // Generic per-query timing: 3 runs of any registry query with the
         // same block cleanup Bench uses.
@@ -447,7 +322,6 @@ object MicroBench {
       " records/s (frame parse + row decode + checkpoint bookkeeping)")
   }
 
-  /** Alternative simhash shape: explode (id, bit) like Ivf's mean. */
   /** Full-pipeline CDC throughput: insert/update/delete mix through
     * WAL → DSv2 stream → raw append → normalize → bucketed MERGE. */
   private def cdcThroughput(spark: SparkSession, records: Int,
@@ -501,22 +375,6 @@ object MicroBench {
     println(f"cdc mirror: $records%d records in $secs%.1f s = " +
       f"${records / secs}%.0f records/s (dest rows: $destRows%d; " +
       "reference claim: 10k+ tps)")
-  }
-
-  private def simhashExplodeBits(df: DataFrame): DataFrame = {
-    import graft.functions.{TextFunctions => TF}
-    val occ = df
-      .select(col("doc_id"), explode(TF.words(col("text"))).as("w"))
-      .withColumn("h", expr(TF.hash60Sql("w")))
-    occ
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, 59), b -> CAST(((h DIV shiftleft(1L, b)) & 1) AS BIGINT) * 2 - 1)"))
-        .as(Seq("bit", "vote")))
-      .groupBy("doc_id", "bit").agg(sum("vote").as("v"))
-      .groupBy("doc_id")
-      .agg(sum(when(col("v") >= 0,
-        expr("shiftleft(1L, CAST(bit AS INT))")).otherwise(lit(0L)))
-        .as("simhash"))
   }
 
   /** Streaming near-dup throughput: deterministic synthetic docs (every

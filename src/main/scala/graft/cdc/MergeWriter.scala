@@ -180,8 +180,7 @@ final class MergeWriter(
     * soft-delete tombstones. */
   def merge(changes: DataFrame, hardDelete: Boolean = false): Unit = {
     // Inside foreachBatch the batch DataFrame belongs to a CLONED session
-    // with isolated conf — set the overwrite mode (and do the reads) on
-    // THAT session or the dynamic-overwrite flag never reaches the write.
+    // — do the reads (and the listing-cache refresh) on THAT session.
     val sess = changes.sparkSession
     val dataCols = changes.columns.toSeq
       .filterNot(Seq(Normalizer.AbsentCols).contains)
@@ -267,18 +266,13 @@ final class MergeWriter(
       else Set.empty
 
     // Dynamic overwrite: only the affected bucket partitions are replaced.
-    val prev = sess.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try resolved.write
+    // The per-write option outranks the session conf, so no shared
+    // session state is touched.
+    resolved.write
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(BucketCol)
       .mode(SaveMode.Overwrite)
       .parquet(tablePath)
-    finally prev match {
-      case Some(v) =>
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        sess.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
 
     rememberSchema(resolved)
 

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -11,20 +11,10 @@ import graft.model.{ChangeRecord, RawTable}
   *
   * @param pkColumns    replica-identity columns inside the payload
   * @param payloadSchema typed schema of the JSON payload (`_peerdb_data`)
-  * @param softDelete   keep deleted keys with `_peerdb_is_deleted = true`
-  *                     (normalize_query.go:327) instead of dropping them
   */
 final case class NormalizeConfig(
     pkColumns: Seq[String],
     payloadSchema: StructType,
-    softDelete: Boolean = true,
-    /** Source→destination column renames applied at normalize (the
-      * per-column rename/override map, normalize_query.go:146-160;
-      * TableMapping column settings). Keys are source payload names —
-      * `pkColumns` stay source names; downstream writers see the
-      * destination names. Type overrides are already expressed by
-      * `payloadSchema` (from_json casts to it). */
-    columnRenames: Map[String, String] = Map.empty,
     /** PEERDB_SOURCE_SCHEMA_AS_DESTINATION_COLUMN
       * (dynamicconf.go:398-405): the destination gains a
       * `_peerdb_source_schema` column carrying the source table's
@@ -58,6 +48,8 @@ final case class NormalizeConfig(
   * (= raw `_peerdb_timestamp`), `_peerdb_is_deleted`, and `_absent_cols` —
   * columns still unresolved after within-batch backfill, which the merge
   * writer resolves against the destination (`coalesce`-by-presence).
+  * Deleted keys always come out as tombstones (`_peerdb_is_deleted =
+  * true`, normalize_query.go:327): the sink applies the delete policy.
   *
   * Scale: one shuffle, hash-partitioned by the primary key (high
   * cardinality); everything else is narrow. At 100 TB of changes the window
@@ -156,25 +148,21 @@ object Normalizer {
           .orderBy(col(RawTable.Timestamp).desc, col(RawTable.Uid).desc)))
       .filter(col("_rn") === 1)
 
-    // Columns never seen in this batch stay absent → merge-time coalesce.
-    def outName(c: String) = cfg.columnRenames.getOrElse(c, c)
     val schemaOut =
       if (cfg.sourceSchemaColumn)
         Seq(col("_src_schema").as(SourceSchemaCol))
       else Nil
-    val out = ranked.select(
-      cfg.pkColumns.map(k => col(s"_pk_$k").as(outName(k))) ++
-        valueCols.map(c => col(s"_val_$c.v").as(outName(c))) ++
+    ranked.select(
+      cfg.pkColumns.map(k => col(s"_pk_$k").as(k)) ++
+        valueCols.map(c => col(s"_val_$c.v").as(c)) ++
         schemaOut ++ Seq(
           col(RawTable.Timestamp).as(RawTable.Version),
           (col(RawTable.RecordType) === ChangeRecord.TypeDelete)
             .as(RawTable.IsDeleted),
-          // Absent-column names travel under their DESTINATION name: the
-          // merge writer resolves them against destination columns.
+          // Columns never seen in this batch stay absent → merge-time
+          // coalesce.
           array_compact(array(valueCols.map(c =>
-            when(col(s"_val_$c").isNull, lit(outName(c)))): _*))
+            when(col(s"_val_$c").isNull, lit(c))): _*))
             .as(AbsentCols)): _*)
-
-    if (cfg.softDelete) out else out.filter(!col(RawTable.IsDeleted))
   }
 }

@@ -126,9 +126,9 @@ object TextFunctions {
     * SAME long column (no per-slot array extraction), and the alternative
     * — exploding (id, bit) rows like Ivf's mean — multiplies the word-
     * occurrence row count ×60 before the shuffle. Measured at sf0.1
-    * (graft.MicroBench simhash): 60-agg ≈ 0.45 s vs explode-bit ≈ 3.3 s,
-    * so even if the wide aggregate drops out of whole-stage codegen the
-    * row-volume saving dominates 8×. Ivf's tradeoff differs because its
+    * (NOTES.md "Wide-but-cheap aggregates"): 60-agg ≈ 0.45 s vs
+    * explode-bit ≈ 3.3 s, so even if the wide aggregate drops out of
+    * whole-stage codegen the row-volume saving dominates 8×. Ivf's tradeoff differs because its
     * input is already one row per (vector, dim) float and the aggregate
     * buffer there is dims×k cells, not 60 longs.
     *

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{MergeWriter, NormalizeConfig, Normalizer, SchemaEvolution}
-import graft.model.RawTable
+import graft.model.{ChangeRecord, RawTable}
 
 /** Per-destination-table replication settings (the TableMapping entry,
   * protos/flow.proto TableMapping): replica-identity columns + typed
@@ -69,6 +69,9 @@ final case class MirrorConfig(
     payloadSchema: StructType,
     destinationTable: String = "dest",
     maxBatchSize: Int = 250000,
+    /** Delete policy, applied by the sinks only: true keeps a deleted key
+      * as a tombstone row (`_peerdb_is_deleted`), false deletes the
+      * destination row. */
     softDelete: Boolean = true,
     /** Snapshot→CDC handoff: checkpoint the initial snapshot was taken at;
       * the stream starts strictly after it (snapshot_flow.go). */
@@ -214,6 +217,10 @@ private[mirror] object EsIdScheme {
     s"$checkpointDir/graft-es-id-scheme"
 }
 
+/** One (destination table, record type) group of a micro-batch. */
+private final case class BatchGroup(table: String, recordType: Int,
+    records: Long, maxCheckpoint: Long, minCommitMicros: Long)
+
 class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
 
   /** PEERDB_SOURCE_SCHEMA_AS_DESTINATION_COLUMN resolved against this
@@ -266,13 +273,15 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
         softDeleteCol = cfg.softDeleteColName,
         syncedAtCol = cfg.syncedAtColName))
     }
-  /** Every normalized batch lands through here: tables with a configured
-    * aggregate view merge via [[IncrementalAgg.applyBatch]] (which wraps
-    * the same MergeWriter merge between the before/after images); the
-    * rest merge directly. The view wrapper is built per call from the
-    * caller's table config — a view configured for a table that joins
-    * the mirror later (catchUpTable) works without a tableSet entry at
-    * construction time. */
+  /** Every normalized batch lands through here, under the mirror's
+    * delete policy (`softDelete = false` removes tombstoned keys from
+    * the destination). Tables with a configured aggregate view merge
+    * via [[IncrementalAgg.applyBatch]] (which wraps the same MergeWriter
+    * merge between the before/after images); the rest merge directly.
+    * The view wrapper is built per call from the caller's table config
+    * — a view configured for a table that joins the mirror later
+    * (catchUpTable) works without a tableSet entry at construction
+    * time. */
   private def applyChanges(table: String, writer: MergeWriter,
       pkColumns: Seq[String], normalized: org.apache.spark.sql.DataFrame,
       batchId: Option[Long] = None): Unit =
@@ -282,9 +291,21 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
         // replays (write-ahead before-image + pointer commit — see
         // IncrementalAgg's crash-safety protocol)
         new IncrementalAgg(spark, av.dir, av.groupCol, av.valueCol,
-          pkColumns).applyBatch(writer, normalized, batchId = batchId)
-      case None => writer.merge(normalized)
+          pkColumns).applyBatch(writer, normalized,
+            hardDelete = !cfg.softDelete, batchId = batchId)
+      case None => writer.merge(normalized, hardDelete = !cfg.softDelete)
     }
+
+  /** One table's change set from a raw slice: its change records
+    * (relation/message records, type ≥ 3, stay in the raw changefeed)
+    * normalized to one upsert or tombstone per key. Tombstones always
+    * reach the sink, which applies the mirror's delete policy. */
+  private def changeSet(raw: DataFrame, table: String,
+      pkColumns: Seq[String], schema: StructType): DataFrame =
+    Normalizer.normalize(
+      raw.filter(col(RawTable.DestinationTable) === table &&
+        col(RawTable.RecordType) <= ChangeRecord.TypeDelete),
+      NormalizeConfig(pkColumns, schema, sourceSchemaColumn = srcSchemaCol))
   /** Live payload schemas: start from config, re-widened from the
     * destination's persisted schema (a restarted mirror must not parse
     * with a pre-ADD-COLUMN config and silently drop the new column), then
@@ -482,7 +503,6 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
       * (SetLastNormalizedBatchIDForTable, normalize.go:545). */
     def syncAndNormalize(raw: org.apache.spark.sql.DataFrame,
         batchId: Long): Unit = {
-      import graft.model.ChangeRecord
       ensureTables()
       val synced = graft.util.FsText.read(syncHwmPath, hadoopConf)
         .map(_.trim.toLong)
@@ -1109,43 +1129,45 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     // rows instead of appending duplicates. The HWM remains as a cheap
     // skip of already-landed batches on full-history replay.
     if (rawHighWaterMark.forall(batchId > _)) {
-      // foreachBatch frames belong to a CLONED session with isolated conf —
-      // the overwrite mode must be set on THAT session (see NOTES.md).
-      val sess = batch.sparkSession
-      val prev =
-        sess.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try raw.write.mode(SaveMode.Overwrite)
+      raw.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(RawTable.BatchId)
         .parquet(cfg.rawDir)
-      finally prev match {
-        case Some(v) =>
-          sess.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          sess.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
       graft.util.FsText.write(hwmPath, batchId.toString, hadoopConf)
     }
 
+    // One driver-side summary of the pinned batch, per (destination
+    // table, record type): count, max checkpointId, min commit time —
+    // bounded by tables × record types. Record counts, never the
+    // normalize plan, decide which tables have changes to merge; the
+    // same rows feed the stats catalog.
+    val groups = batch0
+      .groupBy(col("destinationTable"), col("recordType"))
+      .agg(count(lit(1)), max(col("checkpointId")),
+        min(col("commitTimeMicros")))
+      .collect().toSeq.map(r => BatchGroup(r.getString(0), r.getInt(1),
+        r.getLong(2), r.getLong(3), r.getLong(4)))
+    val changes = groups.filter(_.recordType <= ChangeRecord.TypeDelete)
+    val changedTables = changes.map(_.table).toSet
+
     // Stats: batch bookkeeping after the raw rows land (sync_time marks
     // staged-but-unnormalized — the normalize-lag probe keys on it), end
-    // events after the merge below. Aggregates run on the pinned batch;
-    // the per-table collect is bounded by the mirror's table set.
+    // events after the merge below.
     val statEndLsn: Option[Long] = stats.flatMap { st =>
       st.addCdcBatch(cfg.flow, batchId)
-      val info = batch.agg(count(lit(1)), max(col("checkpointId")),
-        min(col("commitTimeMicros"))).head
-      if (info.getLong(0) == 0L) None
+      if (groups.isEmpty) None
       else {
-        val (rows, endLsn) = (info.getLong(0), info.getLong(1))
-        st.updateCdcBatch(cfg.flow, batchId, rows, endLsn,
-          firstRowCommitMicros = Some(info.getLong(2)))
+        val endLsn = groups.map(_.maxCheckpoint).max
+        st.updateCdcBatch(cfg.flow, batchId, groups.map(_.records).sum,
+          endLsn, firstRowCommitMicros =
+            Some(groups.map(_.minCommitMicros).min))
         st.updateLatestLsnAtSource(cfg.flow, endLsn)
         st.addBatchTables(cfg.flow, batchId,
-          StatsCatalog.tableCountsFrame(raw, RawTable.DestinationTable,
-            RawTable.RecordType).collect().toSeq.map(r =>
-            StatsCatalog.TableOps(r.getString(0), r.getLong(1),
-              r.getLong(2), r.getLong(3))))
+          changes.groupBy(_.table).toSeq.map { case (table, gs) =>
+            def n(t: Int) = gs.filter(_.recordType == t).map(_.records).sum
+            StatsCatalog.TableOps(table, n(ChangeRecord.TypeInsert),
+              n(ChangeRecord.TypeUpdate), n(ChangeRecord.TypeDelete))
+          })
         Some(endLsn)
       }
     }
@@ -1156,7 +1178,6 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     // column; earlier ones parse to NULL — the reference's backfill-as-
     // null semantics. Driver-side collect is fine: deltas are rare and
     // tiny.
-    import graft.model.ChangeRecord
     raw.filter(col(RawTable.RecordType) === ChangeRecord.TypeRelation)
       .select(RawTable.DestinationTable, RawTable.Data)
       .collect().foreach { r =>
@@ -1183,23 +1204,22 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     // PubSub/EventHubs connectors are sync-only (kafka.go SyncRecords;
     // no normalize), so each batch publishes its shaped records over the
     // wire instead of merging.
-    if (cfg.queueUrl.isDefined) publishQueue(raw, batch, batchId)
+    if (cfg.queueUrl.isDefined)
+      publishQueue(raw, batch, batchId, changedTables)
     // CLICKHOUSE destinations normalize SERVER-SIDE: the raw records
     // ship to the CH raw table and one INSERT…SELECT per table runs
     // there — the reference's CH flow, where no per-key MERGE exists
     // (the ReplacingMergeTree engine is the merge).
     else if (chDest.isDefined) chDest.get.syncAndNormalize(raw, batchId)
     else writers.foreach { case (table, (tc, writer)) =>
-      val slice = raw.filter(col(RawTable.DestinationTable) === table &&
-        col(RawTable.RecordType) <= ChangeRecord.TypeDelete)
-      val normalized = Normalizer.normalize(
-        slice, NormalizeConfig(tc.pkColumns, liveSchemas(table),
-          softDelete = cfg.softDelete,
-          sourceSchemaColumn = srcSchemaCol))
-      if (!normalized.isEmpty) warehouseDest match {
-        case Some(w) => w.load(table, tc, normalized, batchId)
-        case None => applyChanges(table, writer, keysOf(tc),
-          normalized, batchId = Some(batchId))
+      if (changedTables(table)) {
+        val normalized =
+          changeSet(raw, table, tc.pkColumns, liveSchemas(table))
+        warehouseDest match {
+          case Some(w) => w.load(table, tc, normalized, batchId)
+          case None => applyChanges(table, writer, keysOf(tc),
+            normalized, batchId = Some(batchId))
+        }
       }
     }
 
@@ -1272,8 +1292,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     val inject = concat_ws(",", frags.result(): _*)
     def embed(c: org.apache.spark.sql.Column)
         : org.apache.spark.sql.Column =
-      when(col("recordType") >
-          graft.model.ChangeRecord.TypeDelete || c.isNull, c)
+      when(col("recordType") > ChangeRecord.TypeDelete || c.isNull, c)
         .otherwise(when(c === "{}",
           concat(lit("{"), inject, lit("}")))
           .otherwise(concat(lit("{"), inject, lit(","),
@@ -1309,8 +1328,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     * converges to the same state (the reference's posture: no
     * idempotent-producer session, `kgo.Record` keys carry dedup). */
   private def publishQueue(raw: DataFrame, batch: DataFrame,
-      batchId: Long): Unit = {
-    import graft.model.ChangeRecord
+      batchId: Long, changedTables: Set[String]): Unit = {
     if (queueHighWaterMark.exists(batchId <= _)) return
     val url = cfg.queueUrl.get
     val kafka = graft.sinks.ShapedQueue.KafkaUrl
@@ -1343,7 +1361,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
           graft.util.FsText.write(marker,
             if (queueHighWaterMark.isEmpty) EsIdScheme.Current
             else EsIdScheme.Legacy, hadoopConf)
-        publishEs(changes, s"http://$h:$p")
+        publishEs(raw, s"http://$h:$p", changedTables)
       // a lua script's shaped records ride the SHARED routing
       // ([[graft.sinks.ShapedQueue]] — the same leg QRep dest_url
       // publishes through)
@@ -1400,15 +1418,13 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     * upsert) or a `delete` action; the NDJSON ships via
     * [[graft.sinks.EsSink.bulkPublish]], one HTTP connection per
     * Spark partition. Returns actions shipped. */
-  private def publishEs(changes: DataFrame, baseUrl: String): Long = {
+  private def publishEs(raw: DataFrame, baseUrl: String,
+      changedTables: Set[String]): Long = {
     var total = 0L
     writers.foreach { case (table, (tc, _)) =>
-      val slice = changes.filter(
-        col(RawTable.DestinationTable) === table)
-      val normalized = Normalizer.normalize(
-        slice, NormalizeConfig(tc.pkColumns, liveSchemas(table),
-          softDelete = true, sourceSchemaColumn = srcSchemaCol))
-      if (!normalized.isEmpty) {
+      if (changedTables(table)) {
+        val normalized =
+          changeSet(raw, table, tc.pkColumns, liveSchemas(table))
         // With the disambiguator on, the schema name travels in the
         // document BODY (the reference ships record items verbatim into
         // the ES document); the `_id` stays pk-derived — matching the
@@ -1476,7 +1492,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
       .foreach(PgPublication.requireTablePublished(cfg, _, table))
     val slice0 = graft.cdc.ChangeLogBatch.read(spark, cfg.walDir)
       .filter(col("destinationTable") === table &&
-        col("recordType") <= graft.model.ChangeRecord.TypeDelete)
+        col("recordType") <= ChangeRecord.TypeDelete)
     // Catch-up replays the WAL from before the table joined — the same
     // transform must apply or the late table would diverge from tables
     // that streamed through it.
@@ -1484,9 +1500,6 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
       .map(graft.transform.RowTransform.sqlTransform(slice0, _))
       .getOrElse(slice0)
     val raw = toRaw(embedMetadata(slice), batchId = -1L)
-    val normalized = Normalizer.normalize(
-      raw, NormalizeConfig(tc.pkColumns, tc.effectiveSchema,
-        softDelete = cfg.softDelete, sourceSchemaColumn = srcSchemaCol))
     val dir = cfg.copy(extraTables = cfg.extraTables + (table -> tc))
       .tableSet(table)._2
     val writer = new MergeWriter(spark, dir, keysOf(tc),
@@ -1506,10 +1519,11 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
           s"table addition canceled: $table")
     try {
       checkCanceled()
-      val empty = normalized.isEmpty // job 1
+      // the WAL slice's record count decides, not the normalize plan
+      val empty = raw.isEmpty // job 1
       checkCanceled()
-      if (!empty)
-        applyChanges(table, writer, keysOf(tc), normalized) // job 2+
+      if (!empty) applyChanges(table, writer, keysOf(tc), // job 2+
+        changeSet(raw, table, tc.pkColumns, tc.effectiveSchema))
       checkCanceled()
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -1664,21 +1678,15 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     * incremental merge chain and this recompute MUST agree (asserted in
     * MirrorEqualitySpec) — the engine's core CDC invariant, and the raw
     * table's reason to exist (§2.4: normalize reads a batch-id range).
-    * Soft deletes are filtered like [[destination]]. */
-  def destinationAsOf(maxBatchId: Long): DataFrame = {
-    import graft.model.ChangeRecord
-    val raw = spark.read.parquet(cfg.rawDir)
-      .filter(col(RawTable.BatchId) <= maxBatchId &&
-        col(RawTable.DestinationTable) === cfg.destinationTable &&
-        col(RawTable.RecordType) <= ChangeRecord.TypeDelete)
-    val normalized = Normalizer.normalize(
-      raw, NormalizeConfig(cfg.pkColumns,
-        liveSchemas(cfg.destinationTable), softDelete = cfg.softDelete,
-        sourceSchemaColumn = srcSchemaCol))
+    * Tombstones are filtered under either delete policy. */
+  def destinationAsOf(maxBatchId: Long): DataFrame =
+    changeSet(
+      spark.read.parquet(cfg.rawDir)
+        .filter(col(RawTable.BatchId) <= maxBatchId),
+      cfg.destinationTable, cfg.pkColumns,
+      liveSchemas(cfg.destinationTable))
       .drop(Normalizer.AbsentCols)
-    if (cfg.softDelete) normalized.filter(!col(RawTable.IsDeleted))
-    else normalized
-  }
+      .filter(!col(RawTable.IsDeleted))
 
   /** The normalized destination table (soft deletes filtered). */
   def destination(): DataFrame = destination(cfg.destinationTable)

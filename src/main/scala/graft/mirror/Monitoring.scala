@@ -1,62 +1,5 @@
 package graft.mirror
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener._
-
-/** Mirror health metrics — the Spark restatement of the reference's
-  * monitoring surface (flow/connectors/utils/monitoring/monitoring.go:
-  * slot-lag gauges, per-batch row counters, heartbeats). A
-  * `StreamingQueryListener` replaces the bespoke metric pumps: every
-  * micro-batch progress event carries rows/sec, batch duration and source
-  * offsets; idle ticks (the 60 s heartbeat, design doc App. B) surface as
-  * zero-row progress events.
-  */
-final case class BatchMetric(
-    queryName: String,
-    batchId: Long,
-    numInputRows: Long,
-    processedRowsPerSecond: Double,
-    batchDurationMs: Long,
-    endOffset: String)
-
-final class MirrorMetricsListener(keep: Int = 256)
-    extends StreamingQueryListener {
-
-  private val metrics = mutable.ArrayDeque.empty[BatchMetric]
-
-  override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-
-  override def onQueryProgress(e: QueryProgressEvent): Unit = synchronized {
-    val p = e.progress
-    metrics.append(BatchMetric(
-      Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
-      p.processedRowsPerSecond, p.batchDuration,
-      p.sources.headOption.map(s => String.valueOf(s.endOffset))
-        .getOrElse("")))
-    while (metrics.size > keep) metrics.removeHead()
-  }
-
-  /** Recent batch metrics, newest last. */
-  def recent: Seq[BatchMetric] = synchronized(metrics.toSeq)
-
-  /** Replication lag proxy: records admitted but not yet normalized is
-    * zero at every batch boundary here (normalize runs in-batch); the
-    * interesting signal is throughput decay and empty-batch heartbeats. */
-  def lastThroughput: Option[Double] =
-    recent.lastOption.map(_.processedRowsPerSecond)
-
-  def register(spark: SparkSession): this.type = {
-    spark.streams.addListener(this)
-    this
-  }
-  def unregister(spark: SparkSession): Unit =
-    spark.streams.removeListener(this)
-}
-
 /** Slot lag — the reference's headline replication gauge
   * (PeerDBSlotLagGBs, monitoring.go; here in RECORDS, the WAL simulator's
   * native unit): distance between the WAL head and the stream's committed

@@ -151,7 +151,8 @@ object ConnectedComponents {
       // final) min-aggregate per round. shuffle_hash: both sides are
       // mid-cardinality keyed frames — broadcast would rebuild the full
       // label map per task, SMJ pays two sorts (same measurement as the
-      // shingle/band self-joins, MicroBench jachints).
+      // shingle/band self-joins: 0.7 s hinted vs 2.2 s at sf0.1, NOTES.md
+      // "Self-joins on mid-cardinality keys").
       val (next, nextIds) = ckpt(
         e.join(labels.hint("shuffle_hash"), e("cc_a") === labels("node"))
           .select(col("cc_b").as("node"), col("cluster_id"))

@@ -141,8 +141,8 @@ object CurationQueries {
     * join back), span frequency is one hash aggregate, and the verdict
     * join is shuffle_hash on the span key (broadcast would rebuild the
     * full span→count map per task; SMJ pays two string sorts — measured
-    * 1.6×: 0.53 s hinted vs 0.85 s planner default at sf0.1, MicroBench
-    * spanhints). Output: per-doc span counts and per-mille kept. */
+    * 1.6×: 0.53 s hinted vs 0.85 s planner default at sf0.1, NOTES.md
+    * round 3). Output: per-doc span counts and per-mille kept. */
   val spanDedup = GraftQuery(
     "q_span_dedup",
     "cross-doc repeated 5-gram span removal stats (C4 §2.2)",

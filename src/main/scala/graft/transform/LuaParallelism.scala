@@ -10,50 +10,23 @@ import org.apache.spark.sql.DataFrame
   *     inputs coalesce down (bounding concurrent interpreters, the
   *     pool-size semantics an operator sets the knob for), narrow
   *     inputs repartition up;
-  *   - unset/0: only the small-batch spread applies — a batch
-  *     arriving as fewer partitions than min(4, defaultParallelism)
-  *     spreads to defaultParallelism so per-record interpretation
-  *     never runs single-threaded while cores idle; multi-partition
-  *     batches keep their layout (no shuffle on the hot path).
+  *   - unset/0: only the small-batch spread applies ([[graft.util
+  *     .Spread]], the one width policy) — a batch arriving as fewer
+  *     partitions than min(4, defaultParallelism) spreads to
+  *     defaultParallelism so per-record interpretation never runs
+  *     single-threaded while cores idle; multi-partition and
+  *     exchange-topped batches keep their layout (no shuffle, and no
+  *     width probe that would run one, on the hot path).
   *
   * `env` is the mirror's per-flow override map
   * (FlowConnectionConfigs.env — dynLookup's env-first order). */
 private[transform] object LuaParallelism {
 
-  /** Input width read from the LOGICAL plan when an explicit
-    * repartition sits on top (behind projections/filters): probing
-    * `df.rdd` instead would FINALIZE the AdaptiveSparkPlan and run
-    * the exchange once for the probe and once again for the real
-    * action (a new QueryExecution cannot reuse the probe's shuffle) —
-    * measured as a full duplicate shuffle per Lua stage. Plans with
-    * no explicit repartition fall back to the rdd probe, which is
-    * free there (narrow chain over a scan). */
-  private def staticWidth(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Option[Int] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    plan match {
-      case p: Project => staticWidth(p.child)
-      case f: Filter => staticWidth(f.child)
-      // shuffling repartitions only: coalesce(n) also compiles to
-      // Repartition but with shuffle=false, and it only CAPS the width
-      // — a narrowScan.coalesce(8) would report 8, skip the spread and
-      // run the stage serially on its single real partition (ADVICE
-      // r15). Coalesce chains fall through to the rdd probe, which is
-      // free there (narrow chain, no exchange).
-      case r: Repartition if r.shuffle => Some(r.numPartitions)
-      case r: RepartitionByExpression => r.optNumPartitions
-      case _ => None
-    }
-  }
-
   def spread(df: DataFrame,
       env: Map[String, String] = Map.empty): DataFrame = {
-    val spark = df.sparkSession
     val configured = graft.mirror.Settings
-      .get(spark, "queue.parallelism", env).map(_.toInt).getOrElse(0)
-    val cur = staticWidth(df.queryExecution.analyzed)
-      .getOrElse(df.rdd.getNumPartitions)
+      .get(df.sparkSession, "queue.parallelism", env).map(_.toInt)
+      .getOrElse(0)
     if (configured > 0) {
       // repartition in BOTH directions: coalesce(narrower) would fuse
       // the bound into the upstream stage and run the PULL at the
@@ -62,11 +35,8 @@ private[transform] object LuaParallelism {
       // reference's LuaPool bounds only interpreter concurrency and
       // the pull stays wide. The shuffle is the price of the knob;
       // unset leaves the hot path shuffle-free below.
-      if (cur == configured) df
+      if (graft.util.Spread.width(df).contains(configured)) df
       else df.repartition(configured)
-    } else {
-      val par = spark.sparkContext.defaultParallelism
-      if (cur >= math.min(4, par)) df else df.repartition(par)
-    }
+    } else graft.util.Spread(df)
   }
 }

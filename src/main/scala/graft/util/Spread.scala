@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * idle. NO-OP when the input is already parallel — at real scale a
   * corpus scan has far more partitions than cores, and repartitioning
   * it would both full-shuffle the data AND coalesce its parallelism
-  * away (strictly harmful); min(4, cores) is the same "already wide
-  * enough" floor LuaParallelism uses.
+  * away (strictly harmful); min(4, cores) is the "already wide enough"
+  * floor. The Lua stages ([[graft.transform.LuaParallelism]]) use the
+  * same policy, and [[width]] for their `queue.parallelism` override.
   *
   * Safe by construction (r16, VERDICT r15 "What's wrong" #4): width is
   * read from the LOGICAL plan when an explicit shuffling repartition
@@ -22,8 +23,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * exchange already ran at the session's shuffle parallelism, and
   * probing it under AQE would finalize the plan and execute the
   * shuffle once for the probe alone, with the real action re-running
-  * it (the double-shuffle trap LuaParallelism's static reader fixed
-  * in r15).
+  * it (the double-shuffle trap).
   */
 object Spread {
 
@@ -33,7 +33,7 @@ object Spread {
     * and only CAPS the width — it reports nothing here (ADVICE r15:
     * a narrowScan.coalesce(8) must not claim width 8), falling through
     * to the narrow-chain probe below, where it is free. */
-  private[graft] def staticWidth(plan: LogicalPlan): Option[Int] =
+  private def staticWidth(plan: LogicalPlan): Option[Int] =
     plan match {
       case p: Project => staticWidth(p.child)
       case f: Filter => staticWidth(f.child)
@@ -57,19 +57,21 @@ object Spread {
     case _ => false
   }
 
+  /** The frame's partition width when it is known without running a
+    * job: read from the plan, or probed on a narrow chain. None for an
+    * exchange-topped frame (join/aggregate/window/sort…), whose width
+    * only running the exchange would reveal. */
+  def width(df: DataFrame): Option[Int] = {
+    val analyzed = df.queryExecution.analyzed
+    staticWidth(analyzed).orElse(
+      if (probeFree(analyzed)) Some(df.rdd.getNumPartitions) else None)
+  }
+
   def apply(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val floor = math.min(4, par)
-    val analyzed = df.queryExecution.analyzed
-    staticWidth(analyzed) match {
-      case Some(w) => if (w >= floor) df else df.repartition(par)
-      case None if probeFree(analyzed) =>
-        if (df.rdd.getNumPartitions >= floor) df else df.repartition(par)
-      case None =>
-        // Exchange-topped (join/aggregate/window/sort…): the frame has
-        // already been shuffled to the session's parallelism — treat as
-        // wide. Never probe: the probe itself would run the exchange.
-        df
-    }
+    // An exchange-topped frame has already been shuffled to the
+    // session's parallelism — treat it as wide.
+    if (width(df).forall(_ >= math.min(4, par))) df
+    else df.repartition(par)
   }
 }

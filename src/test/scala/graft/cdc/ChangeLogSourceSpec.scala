@@ -103,7 +103,11 @@ class ChangeLogSourceSpec extends SparkSpec {
     val ckpt = tmpDir("ckpt3")
     ChangeLogWal.append(wal, (1L to 6L).map(i =>
       rec(i, i, 0, s"""{"id":$i}""")))
-    val metrics = new graft.mirror.MirrorMetricsListener().register(spark)
+    import graft.mirror.Metrics.{RecordsPerSecond, RecordsSynced}
+    val sink = new graft.mirror.InMemoryMetrics()
+    val metrics = new graft.mirror.MetricsListener(sink).register(spark)
+    // one RecordsSynced gauge point per progress event
+    def batches = sink.history.filter(_.name == RecordsSynced)
     try {
       val q = spark.readStream
         .format("graft.cdc.ChangeLogSourceProvider")
@@ -115,12 +119,12 @@ class ChangeLogSourceSpec extends SparkSpec {
       q.awaitTermination()
       // listener events are async; poll briefly
       var waited = 0
-      while (metrics.recent.map(_.numInputRows).sum < 6 && waited < 50) {
+      while (batches.map(_.value).sum < 6 && waited < 50) {
         Thread.sleep(100); waited += 1
       }
-      assert(metrics.recent.map(_.numInputRows).sum == 6L)
-      assert(metrics.recent.size >= 3) // maxBatchSize=2 → ≥3 batches
-      assert(metrics.lastThroughput.isDefined)
+      assert(batches.map(_.value).sum == 6.0)
+      assert(batches.size >= 3) // maxBatchSize=2 → ≥3 batches
+      assert(sink.history.exists(_.name == RecordsPerSecond))
 
       // Slot lag: drained → 0; three fresh WAL records → 3; drained → 0.
       assert(graft.mirror.SlotLag.records(wal, ckpt) == 0L)

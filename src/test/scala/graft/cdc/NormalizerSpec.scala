@@ -81,33 +81,6 @@ class NormalizerSpec extends SparkSpec {
     assert(m(2L).getAs[Long](RawTable.Version) == 7L)
   }
 
-  test("per-column renames apply at normalize, absent names follow") {
-    val renamed = Normalizer.normalize(
-      raw(
-        (100L, 0, """{"id":1,"name":"a","v":5}""", null, ""),
-        (200L, 1, """{"id":1,"v":6}""", """{"id":1}""", "name")),
-      cfg.copy(columnRenames = Map("name" -> "full_name", "v" -> "val")))
-    assert(renamed.columns.toSeq.take(3) == Seq("id", "full_name", "val"))
-    val r = renamed.collect().head
-    assert(r.getAs[String]("full_name") == "a") // backfilled, renamed
-    assert(r.getAs[Long]("val") == 6L)
-    // A column absent for the whole batch reports its DESTINATION name.
-    val absent = Normalizer.normalize(
-      raw((300L, 0, """{"id":2,"v":7}""", null, "name")),
-      cfg.copy(columnRenames = Map("name" -> "full_name")))
-      .collect().head.getAs[scala.collection.Seq[String]](
-        Normalizer.AbsentCols)
-    assert(absent.toSeq == Seq("full_name"))
-  }
-
-  test("hard-delete config drops deleted keys") {
-    val out = Normalizer.normalize(raw(
-      (1L, 0, """{"id":1,"v":1}""", null, ""),
-      (2L, 2, null, """{"id":1}""", "")),
-      cfg.copy(softDelete = false))
-    assert(out.count() == 0)
-  }
-
   test("sourceSchemaColumn: _peerdb_source_schema extracts from the " +
     "embedded JSON key — deletes take it from the match image, a " +
     "record without the key reads '' (the many-to-one disambiguator, " +

@@ -23,13 +23,21 @@ class MirrorEqualitySpec extends SparkSpec {
       data, matchData, toast)
 
   test("mirror equality across two runs with inserts/updates/deletes") {
+    // Both delete policies: soft keeps tombstones in the stored table
+    // (filtered on read), hard removes the keys at the merge. Either way
+    // the incremental chain and the one-shot recompute must agree.
+    twoRunEquality(softDelete = true)
+    twoRunEquality(softDelete = false)
+  }
+
+  private def twoRunEquality(softDelete: Boolean): Unit = {
     val wal = tmpDir("wal")
     val base = tmpDir("mirror")
     val cfg = MirrorConfig(
       walDir = wal, rawDir = s"$base/raw", destDir = s"$base/dest",
       checkpointDir = s"$base/ckpt", pkColumns = Seq("id"),
       payloadSchema = payloadSchema, destinationTable = "dest.t",
-      maxBatchSize = 4)
+      maxBatchSize = 4, softDelete = softDelete)
 
     // Run 1: 100 keys inserted, some updated, some deleted, one TOAST
     // update, in several transactions.
@@ -56,7 +64,8 @@ class MirrorEqualitySpec extends SparkSpec {
       assert(rows.head.getAs[Long]("v") == v, s"id=$id v")
     }
 
-    assert(runner.destination().count() == 90) // 100 − 10 deleted
+    assert(runner.destination().count() == 90, // 100 − 10 deleted
+      s"softDelete = $softDelete")
     expectRow(5L, "u5", 500L)     // updated
     expectRow(40L, "n40", 4444L)  // TOAST: name kept, v updated
     expectRow(95L, "n95", 950L)   // untouched insert
@@ -91,8 +100,10 @@ class MirrorEqualitySpec extends SparkSpec {
       .select("id", "name", "v").collect()
       .map(r => r.getAs[Long]("id") ->
         ((r.getAs[String]("name"), r.getAs[Long]("v")))).toMap
-    assert(keyed(runner.destinationAsOf(maxBatch)) ==
-      keyed(runner.destination()))
+    val asOf = keyed(runner.destinationAsOf(maxBatch))
+    assert(asOf == keyed(runner.destination()), s"softDelete = $softDelete")
+    // still-deleted keys (62 came back in run 2) are in neither
+    assert(asOf.keySet.intersect((61L to 70L).toSet - 62L).isEmpty)
   }
 
   test("multi-table mirror fans out by destination table") {

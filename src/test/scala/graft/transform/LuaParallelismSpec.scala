@@ -4,9 +4,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByEx
 
 import graft.SparkSpec
 
-/** The r15 probe fix: when the caller already put an explicit
-  * repartition on the batch (the queries spread BEFORE row assembly),
-  * the width must be read statically from the logical plan — probing
+/** The Lua stages' width policy is [[graft.util.Spread]]'s: when the
+  * caller already put an explicit repartition on the batch (the queries
+  * spread BEFORE row assembly), the width is read statically from the
+  * logical plan, and an exchange-topped batch is never probed — probing
   * `df.rdd` would finalize the AdaptiveSparkPlan and execute the
   * exchange once for the probe and again for the real action. */
 class LuaParallelismSpec extends SparkSpec {
@@ -48,5 +49,29 @@ class LuaParallelismSpec extends SparkSpec {
     val out = LuaParallelism.spread(df)
     assert(out.rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
+  }
+
+  test("an exchange-topped batch behind coalesce(8) passes through with " +
+    "NO job launched by the width probe") {
+    import spark.implicits._
+    val df = Seq.tabulate(100)(i => (i.toLong % 7, i.toLong))
+      .toDF("k", "v").groupBy("k").agg(
+        org.apache.spark.sql.functions.sum("v").as("v"))
+      .coalesce(8)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = LuaParallelism.spread(df)
+      Thread.sleep(300) // let any (unexpected) job-start event arrive
+      assert(jobs.get() == 0,
+        s"probing a shuffled batch must launch no job, saw ${jobs.get()}")
+      assert(out eq df,
+        "exchange-topped batch must pass through untouched")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }
