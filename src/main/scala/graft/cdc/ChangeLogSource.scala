@@ -1,7 +1,7 @@
 package graft.cdc
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
@@ -43,11 +43,20 @@ object ChangeLogWal {
     * treats end-of-log as a commit boundary, so a tx written across two
     * appends could be torn if a trigger fires between them. Both writers
     * (the simulator and [[PgOutputFrames.ingest]], which holds back
-    * uncommitted tails) honor this. */
+    * uncommitted tails) honor this.
+    *
+    * A segment is published whole: written under a hidden temporary name
+    * that does not end in `.wal`, then renamed atomically, so a reader
+    * polling the live WAL never sees a torn last line. The next segment
+    * is numbered after the highest `.wal` segment, so neither a temporary
+    * file left by a crashed writer nor another file in the directory
+    * (the slot intent marker) shifts the numbering or reuses a name. */
   def append(dir: String, records: Seq[ChangeRecord]): Unit = {
     val d = Paths.get(dir)
     Files.createDirectories(d)
-    val n = Files.list(d).count()
+    val n = segmentFiles(d)
+      .map(_.getFileName.toString.stripSuffix(".wal").toLong + 1)
+      .maxOption.getOrElse(0L)
     val lines = records.map { r =>
       require(r.data == null || !r.data.contains('\n'),
         "WAL payloads must be single-line")
@@ -60,8 +69,10 @@ object ChangeLogWal {
         r.unchangedToastColumns.mkString(","),
         Option(r.checkpointText).getOrElse("")).mkString(Sep.toString)
     }
-    Files.write(d.resolve(f"$n%06d.wal"),
+    val tmp = Files.write(d.resolve(f".$n%06d.wal.tmp"),
       lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, d.resolve(f"$n%06d.wal"),
+      StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Transaction-atomic batch cut with BOUNDED reading — the driver-side

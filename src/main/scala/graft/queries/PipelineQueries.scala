@@ -279,8 +279,7 @@ object PipelineQueries {
       // stage a 96-task schedule (measured 0.865 s for the candidate
       // join's map stage at sf0.1); at scale this is one scan of the
       // embeddings instead of L. No pin: both self-join sides plan the
-      // identical exchange and Catalyst reuses it (ReusedExchange —
-      // verified in plans/r16/q_lsh_multitable_jobs_after.txt).
+      // identical exchange and Catalyst reuses it (ReusedExchange).
       val buckets = e.select(col("vec_id"),
         posexplode(array((0 until nTables).map(t =>
           Similarity.hyperplaneBucketTable("embedding", bits, t)): _*))

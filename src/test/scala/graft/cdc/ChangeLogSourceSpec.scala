@@ -229,6 +229,77 @@ class ChangeLogSourceSpec extends SparkSpec {
     assert(cut3 == 6L)
   }
 
+  test("a stray temporary segment is neither read nor counted") {
+    val wal = tmpDir("straywal")
+    val d = java.nio.file.Paths.get(wal)
+    def names = ChangeLogWal.segmentFiles(d).map(_.getFileName.toString)
+    ChangeLogWal.append(wal, Seq(rec(1, 100, 0, """{"id":1}""")))
+    // what a writer that died between its write and the rename leaves
+    java.nio.file.Files.writeString(d.resolve(".000007.wal.tmp"), "2\u001F")
+    assert(names == Seq("000000.wal"))
+    assert(ChangeLogWal.headCp(wal) == 1L)
+    ChangeLogWal.append(wal, Seq(rec(2, 200, 0, """{"id":2}""")))
+    assert(names == Seq("000000.wal", "000001.wal"))
+    assert(ChangeLogWal.read(wal, -1L, Long.MaxValue).map(_(0).toLong) ==
+      Seq(1L, 2L))
+    assert(ChangeLogBatch.read(spark, wal).count() == 2)
+  }
+
+  test("a reader polling a live WAL never sees a short record") {
+    val wal = tmpDir("livewal")
+    val d = java.nio.file.Paths.get(wal)
+    // ~100 KB segments: a plain file write lands in a dozen pieces
+    val pad = "x" * 2000
+    def data(cp: Long) = s"""{"id":$cp,"pad":"$pad"}"""
+    val txs = 100
+    val perTx = 50
+    // built up front, so the writer spends its time writing segments
+    val segments = (0 until txs).map(t => (1 to perTx).map { i =>
+      val cp = t.toLong * perTx + i
+      rec(cp, t.toLong, 0, data(cp))
+    })
+    val writer =
+      new Thread(() => segments.foreach(ChangeLogWal.append(wal, _)))
+    // A lister polls as fast as it can: every segment it can list is
+    // whole (non-empty, its last line complete).
+    val partial = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val lister = new Thread(() => while (writer.isAlive) {
+      ChangeLogWal.segmentFiles(d).foreach { p =>
+        val ch = java.nio.channels.FileChannel.open(p)
+        val last = java.nio.ByteBuffer.allocate(1)
+        try {
+          val size = ch.size()
+          if (size == 0 || ch.read(last, size - 1) != 1 ||
+            last.get(0) != '\n') partial.add(s"${p.getFileName} ($size B)")
+        } finally ch.close()
+      }
+    })
+    // A consumer drains through the stream's own cut and read.
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var after = 0L
+    def poll(): Unit = {
+      val (cut, _, _) =
+        ChangeLogWal.boundedCut(wal, after, Long.MaxValue, Int.MaxValue)
+      // each segment is one transaction: a cut inside one read a prefix
+      assert(cut % perTx == 0, s"cut $cut tears a transaction")
+      ChangeLogWal.readIter(wal, after, cut).foreach { f =>
+        assert(f.length == 10, s"short record: ${f.mkString("|").take(80)}")
+        val cp = f(0).toLong
+        assert(f(6) == data(cp), s"torn payload at cp $cp")
+        seen += cp
+      }
+      after = cut
+    }
+    writer.start()
+    lister.start()
+    try while (writer.isAlive) poll()
+    finally { writer.join(); lister.join() }
+    poll()
+    assert(partial.size == 0,
+      s"listed partial segments: ${partial.asScala.take(5).mkString(", ")}")
+    assert(seen == (1L to txs.toLong * perTx))
+  }
+
   test("DSv2 batch read: same table, full-history distributed scan") {
     val wal = tmpDir("batchwal")
     ChangeLogWal.append(wal, Seq(

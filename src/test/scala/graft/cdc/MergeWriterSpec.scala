@@ -24,15 +24,22 @@ class MergeWriterSpec extends SparkSpec {
     }.asJava, schema)
   }
 
+  /** Keys 1..n inserted at version 1. */
+  private def inserts(n: Int): DataFrame = changes((1 to n).map(i =>
+    (i.toLong, s"n$i", i.toLong: Any, 1L, false, Seq.empty[String])): _*)
+
   private def state(w: MergeWriter): Map[Long, (String, Any, Long, Boolean)] =
-    w.read().collect().map { r =>
+    rows(w.read())
+
+  private def rows(df: DataFrame): Map[Long, (String, Any, Long, Boolean)] =
+    df.collect().map { r =>
       r.getAs[Long]("id") -> (r.getAs[String]("name"), r.get(r.fieldIndex("v")),
         r.getAs[Long](RawTable.Version), r.getAs[Boolean](RawTable.IsDeleted))
     }.toMap
 
   test("merge: insert, update, toast-coalesce, delete; idempotent replay") {
     val path = tmpDir("merge")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 8)
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
 
     w.merge(changes(
       (1L, "a", 10L, 100L, false, Nil),
@@ -61,7 +68,7 @@ class MergeWriterSpec extends SparkSpec {
 
   test("hard delete clears rows and empty buckets") {
     val path = tmpDir("merge-hard")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 4)
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
     w.merge(changes((1L, "a", 1L, 1L, false, Nil)), hardDelete = true)
     assert(w.read().count() == 1)
     w.merge(changes((1L, null, null, 2L, true, Nil)), hardDelete = true)
@@ -70,23 +77,263 @@ class MergeWriterSpec extends SparkSpec {
 
   test("only affected buckets are rewritten") {
     val path = tmpDir("merge-prune")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 64)
-    w.merge(changes((1 to 200).map(i =>
-      (i.toLong, s"n$i", i.toLong, 1L, false, Seq.empty[String])): _*))
-    val before = bucketMtimes(s"$path/t")
-    Thread.sleep(1100) // parquet mtime granularity
-    w.merge(changes((1L, "x", 99L, 2L, false, Nil)))
-    val after = bucketMtimes(s"$path/t")
-    val changedBuckets = after.filter { case (b, t) => before.get(b) != Some(t) }
-    assert(changedBuckets.size == 1, s"rewrote ${changedBuckets.keys}")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    withConf(OpenCost -> "1") {
+      w.merge(inserts(200))
+      w.merge(inserts(200)) // replay grows the table to 64 buckets
+      assert(bucketMtimes(s"$path/t").size > 32)
+      val before = bucketMtimes(s"$path/t")
+      Thread.sleep(1100) // parquet mtime granularity
+      w.merge(changes((1L, "x", 99L, 2L, false, Nil)))
+      val after = bucketMtimes(s"$path/t")
+      val changedBuckets =
+        after.filter { case (b, t) => before.get(b) != Some(t) }
+      assert(changedBuckets.size == 1, s"rewrote ${changedBuckets.keys}")
+    }
     assert(state(w)(1L) == ("x", 99L, 2L, false))
     assert(state(w).size == 200)
   }
+
+  test("a new small table is one bucket") {
+    val path = tmpDir("merge-one")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    w.merge(inserts(200))
+    w.merge(changes((1L, "x", 99L, 2L, false, Nil)))
+    assert(bucketMtimes(s"$path/t").keySet == Set("_g_bucket=0"))
+    assert(state(w).size == 200)
+    assert(state(w)(1L) == ("x", 99L, 2L, false))
+  }
+
+  test("a table grows from one bucket to 64 once it outgrows the open cost") {
+    val path = tmpDir("merge-grow")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    val rnd = new scala.util.Random(7)
+    // incompressible payloads: the table's bytes track its row count
+    def batch(from: Int, until: Int, version: Long) =
+      (from until until).map(i => (i.toLong,
+        rnd.alphanumeric.take(200).mkString, i.toLong: Any, version, false,
+        Seq.empty[String]))
+    var expected = Map.empty[Long, (String, Any, Long, Boolean)]
+    def mergeAndCheck(b: Seq[(Long, String, Any, Long, Boolean,
+        Seq[String])]): Int = {
+      w.merge(changes(b: _*))
+      expected ++= b.map(r => r._1 -> (r._2, r._3, r._4, r._5))
+      assert(state(w) == expected)
+      layoutCount(s"$path/t")
+    }
+
+    assert(mergeAndCheck(batch(0, 150, 1L)) == 1)
+    // One bucket may hold a third more than the first merge wrote: the
+    // second merge still fits and stays one bucket, the third starts from
+    // twice that and writes the 64-bucket layout.
+    val openCost = dataBytes(s"$path/t") * 4 / 3
+    val counts = withConf(OpenCost -> openCost.toString) {
+      Seq(
+        mergeAndCheck(batch(150, 300, 2L)),
+        // an update of every stored key plus new ones
+        mergeAndCheck(batch(0, 300, 3L) ++ batch(300, 600, 3L)),
+        mergeAndCheck(batch(600, 700, 4L)))
+    }
+    assert(counts == Seq(1, 64, 64), s"bytes ${dataBytes(s"$path/t")}")
+    assert(new java.io.File(s"$path/t").list().count(
+      _.startsWith("_g_bucket=")) > 32)
+  }
+
+  test("a growth cut short by a crash is finished or dropped on next use") {
+    val path = tmpDir("merge-crash")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    val growing = changes((50 to 60).map(i =>
+      (i.toLong, s"u$i", (i * 10).toLong, 2L, false, Seq.empty[String])): _*)
+    val (pre, post, small, grown) = withConf(OpenCost -> "1") {
+      w.merge(inserts(100))
+      val small = state(w)
+      copyTree(s"$path/t", s"$path/pre")
+      w.merge(growing)
+      copyTree(s"$path/t", s"$path/post")
+      (s"$path/pre", s"$path/post", small, state(w))
+    }
+    val postBuckets = bucketDirNames(post)
+    assert(layoutCount(pre) == 1 && layoutCount(post) == 64)
+    assert(grown != small)
+
+    /** A copy of the pre-growth table with a stage built from the grown
+      * layout: `staged` of its bucket dirs, and `moved` of them already in
+      * the table. */
+    def crashed(name: String, committed: Boolean, oldRemoved: Boolean,
+        staged: Seq[String], moved: Seq[String]): String = {
+      val t = s"$path/$name"
+      copyTree(pre, t)
+      if (oldRemoved) bucketDirNames(t).foreach(b => deleteTree(s"$t/$b"))
+      staged.foreach(b => copyTree(s"$post/$b", s"$t/_g_grow/$b"))
+      moved.foreach(b => copyTree(s"$post/$b", s"$t/$b"))
+      new java.io.File(s"$t/_g_grow").mkdirs()
+      if (committed) new java.io.File(s"$t/_g_grow/_SUCCESS").createNewFile()
+      if (oldRemoved)
+        new java.io.File(s"$t/_g_grow/_old_removed").createNewFile()
+      t
+    }
+    val (half, rest) = postBuckets.splitAt(postBuckets.size / 2)
+    val cases = Seq(
+      // crashed while staging: the old layout is intact
+      crashed("staging", committed = false, oldRemoved = false,
+        staged = half, moved = Nil) -> small,
+      // committed, crashed before anything was published
+      crashed("committed", committed = true, oldRemoved = false,
+        staged = postBuckets, moved = Nil) -> grown,
+      // committed, crashed halfway through moving the staged buckets
+      crashed("moving", committed = true, oldRemoved = true,
+        staged = rest, moved = half) -> grown)
+    cases.foreach { case (t, want) =>
+      val r = new MergeWriter(spark, t, Seq("id"))
+      assert(state(r) == want, t)
+      assert(!new java.io.File(s"$t/_g_grow").exists(), t)
+      val keys = spark.range(45, 66).toDF("id")
+      assert(rows(r.readForKeys(keys)) == want.filter(k => k._1 >= 45 &&
+        k._1 <= 65), t)
+      // the stream replays the batch it never recorded as done
+      withConf(OpenCost -> "1")(r.merge(growing))
+      assert(state(r) == grown, t)
+      assert(bucketDirNames(t) == postBuckets, t)
+    }
+  }
+
+  test("hard deletes that empty the upper buckets leave a working layout") {
+    val path = tmpDir("merge-shrink")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    withConf(OpenCost -> "1") {
+      w.merge(inserts(200))
+      w.merge(inserts(200)) // replay grows the table to 64 buckets
+    }
+    assert(layoutCount(s"$path/t") == 64)
+    val at64 = spark.range(1, 301)
+      .select(col("id"), pmod(hash(col("id")), lit(64)).as("b"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val upper = (1L to 200L).filter(at64(_) >= 32)
+    w.merge(changes(upper.map(i =>
+      (i, null, null, 2L, true, Seq.empty[String])): _*), hardDelete = true)
+    assert(layoutCount(s"$path/t") <= 32)
+    var expected = rows(inserts(200)).filter(k => at64(k._1) < 32)
+    assert(state(w) == expected)
+
+    // A pruned merge at the smaller count: updates and new keys, some of
+    // which hash to the upper half at 64.
+    val batch = Seq((1L, "x", 99L: Any, 3L, false, Seq.empty[String])) ++
+      (201L to 260L).map(i => (i, s"n$i", i: Any, 3L, false,
+        Seq.empty[String]))
+    w.merge(changes(batch: _*), hardDelete = true)
+    expected ++= batch.map(r => r._1 -> (r._2, r._3, r._4, r._5))
+    assert(state(w) == expected)
+    val keys = spark.range(1, 301).toDF("id")
+    assert(rows(w.readForKeys(keys)) == expected)
+
+    // Growing back to 64 moves every key to its bucket at 64.
+    withConf(OpenCost -> "1")(
+      w.merge(changes((2L, "y", 7L, 4L, false, Nil)), hardDelete = true))
+    expected += 2L -> ("y", 7L, 4L, false)
+    assert(layoutCount(s"$path/t") == 64)
+    assert(state(w) == expected)
+    assert(rows(w.readForKeys(keys)) == expected)
+  }
+
+  test("replaying a growing merge leaves the same state and keyed reads") {
+    val path = tmpDir("merge-replay")
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    withConf(OpenCost -> "1") {
+      w.merge(inserts(100))
+      val keys = spark.range(1, 21).toDF("id")
+      val keyed = rows(w.readForKeys(keys))
+      assert(keyed.keySet == (1L to 20L).toSet)
+
+      // grows one bucket to 64: every row moves, ids 50-60 change
+      val growing = changes((50 to 60).map(i =>
+        (i.toLong, s"u$i", (i * 10).toLong, 2L, i % 5 == 0,
+          Seq.empty[String])): _*)
+      w.merge(growing)
+      val grown = state(w)
+      assert(grown.size == 100)
+      assert(grown(55L) == ("u55", 550L, 2L, true))
+      assert(grown(56L) == ("u56", 560L, 2L, false))
+      assert(grown(1L) == ("n1", 1L, 1L, false))
+      val layout = bucketMtimes(s"$path/t").keySet
+      assert(layout.size > 1 && layout.size <= 64)
+      assert(rows(w.readForKeys(keys)) == keyed)
+
+      // a crash after the merge commits, before the stream records the
+      // batch, replays it
+      w.merge(growing)
+      assert(state(w) == grown)
+      assert(bucketMtimes(s"$path/t").keySet == layout)
+      assert(rows(w.readForKeys(keys)) == keyed)
+    }
+  }
+
+  test("a table laid out in 64 buckets keeps 64") {
+    val path = tmpDir("merge-legacy")
+    // the fixed 64-bucket layout earlier writers left, written directly
+    // (so without a schema file, like the oldest tables)
+    inserts(200).drop(Normalizer.AbsentCols)
+      .withColumn("_g_bucket", pmod(hash(col("id")), lit(64)))
+      .write.partitionBy("_g_bucket").parquet(s"$path/t")
+    val before = bucketMtimes(s"$path/t")
+    assert(before.size > 32) // 200 keys leave a few of the 64 empty
+    Thread.sleep(1100) // parquet mtime granularity
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    w.merge(changes((1L, "x", 99L, 2L, false, Nil),
+      (1000L, "new", 1L, 2L, false, Nil)))
+    // a pruned merge at 64 buckets: only the two keys' buckets change
+    val keyBuckets = spark.range(1, 1001).filter(col("id").isin(1L, 1000L))
+      .select(pmod(hash(col("id")), lit(64))).collect()
+      .map(r => s"_g_bucket=${r.getInt(0)}").toSet
+    val after = bucketMtimes(s"$path/t")
+    assert(before.keySet.subsetOf(after.keySet))
+    assert(after.filter { case (b, t) => before.get(b) != Some(t) }
+      .keySet == keyBuckets)
+    assert(state(w).size == 201)
+    assert(state(w)(1L) == ("x", 99L, 2L, false))
+  }
+
+  private val OpenCost = "spark.sql.files.openCostInBytes"
 
   private def bucketMtimes(path: String): Map[String, Long] = {
     val d = new java.io.File(path)
     d.listFiles().filter(_.getName.startsWith("_g_bucket=")).map { f =>
       f.getName -> f.listFiles().map(_.lastModified()).max
     }.toMap
+  }
+
+  /** Bytes of the parquet data files in the bucket directories. */
+  private def dataBytes(path: String): Long =
+    new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("_g_bucket="))
+      .flatMap(_.listFiles())
+      .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.length()).sum
+
+  private def bucketDirNames(path: String): Seq[String] =
+    new java.io.File(path).list().filter(_.startsWith("_g_bucket="))
+      .toSeq.sorted
+
+  /** Bucket count the stored layout implies: the smallest power of two
+    * above the highest bucket id. */
+  private def layoutCount(path: String): Int = Integer.highestOneBit(
+    bucketDirNames(path).map(_.stripPrefix("_g_bucket=").toInt).max * 2 + 1)
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val dst = java.nio.file.Paths.get(to)
+    val all = java.nio.file.Files.walk(src)
+    try all.forEach { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p))
+        java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q)
+    } finally all.close()
+  }
+
+  private def deleteTree(path: String): Unit = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(java.nio.file.Files.delete(_))
+    finally all.close()
   }
 }

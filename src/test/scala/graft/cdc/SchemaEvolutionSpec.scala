@@ -78,28 +78,39 @@ class SchemaEvolutionSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{array, col, hash, pmod, lit}
     import spark.implicits._
     val dest = tmpDir("narrowbucket")
-    val w = new MergeWriter(spark, dest, Seq("id"), numBuckets = 2)
+    val w = new MergeWriter(spark, dest, Seq("id"))
     def noAbsent(df: org.apache.spark.sql.DataFrame) =
       df.withColumn(Normalizer.AbsentCols, array().cast("array<string>"))
 
-    // Pick ids landing in DIFFERENT buckets so the widening batch leaves a
-    // narrow-era parquet file behind in the other bucket.
+    // A one-byte open cost grows the table to 64 buckets on its
+    // second merge. Pick ids landing in DIFFERENT buckets there so the
+    // widening batch leaves a narrow-era parquet file behind in the other
+    // bucket; id2's bucket is in the upper half so the stored layout reads
+    // as 64 buckets (no further growth rewrites id1's bucket).
+    val n = MergeWriter.MaxBuckets
     val buckets = spark.range(1, 40)
-      .select(col("id"), pmod(hash(col("id")), lit(2)).as("b"))
+      .select(col("id"), pmod(hash(col("id")), lit(n)).as("b"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val id1 = buckets.collectFirst { case (i, 0) => i }.get
-    val id2 = buckets.collectFirst { case (i, 1) => i }.get
+    val id1 = buckets.collectFirst { case (i, b) if b < n / 2 => i }.get
+    val id2 = buckets.collectFirst { case (i, b) if b >= n / 2 => i }.get
 
-    w.merge(noAbsent(Seq((id1, 10L, 100L, false), (id2, 20L, 100L, false))
-      .toDF("id", "v", RawTable.Version, RawTable.IsDeleted)))
-    // ADD COLUMN batch touches ONLY id2's bucket: id1's bucket keeps its
-    // narrow footer. Schema inference from that footer alone would hide
-    // `extra` from every later merge.
-    w.merge(noAbsent(Seq((id2, 21L, "x", 200L, false))
-      .toDF("id", "v", "extra", RawTable.Version, RawTable.IsDeleted)))
-    // A narrow batch rewriting BOTH buckets must retain id2's `extra`.
-    w.merge(noAbsent(Seq((id1, 11L, 300L, false), (id2, 22L, 300L, false))
-      .toDF("id", "v", RawTable.Version, RawTable.IsDeleted)))
+    withConf("spark.sql.files.openCostInBytes" -> "1") {
+      val narrow = noAbsent(
+        Seq((id1, 10L, 100L, false), (id2, 20L, 100L, false))
+          .toDF("id", "v", RawTable.Version, RawTable.IsDeleted))
+      w.merge(narrow) // new table: one bucket
+      w.merge(narrow) // replay grows it to 64 buckets, both still narrow
+      assert(new java.io.File(dest).list()
+        .count(_.startsWith("_g_bucket=")) == 2)
+      // ADD COLUMN batch touches ONLY id2's bucket: id1's bucket keeps its
+      // narrow footer. Schema inference from that footer alone would hide
+      // `extra` from every later merge.
+      w.merge(noAbsent(Seq((id2, 21L, "x", 200L, false))
+        .toDF("id", "v", "extra", RawTable.Version, RawTable.IsDeleted)))
+      // A narrow batch rewriting BOTH buckets must retain id2's `extra`.
+      w.merge(noAbsent(Seq((id1, 11L, 300L, false), (id2, 22L, 300L, false))
+        .toDF("id", "v", RawTable.Version, RawTable.IsDeleted)))
+    }
 
     val out = w.read().collect()
       .map(r => (r.getAs[Long]("id"),

@@ -37,12 +37,23 @@ class IncrementalAggSpec extends SparkSpec {
         Option(r.get(r.fieldIndex("sum_v")))
           .map(_.asInstanceOf[Long]))).toMap
 
+  // A one-byte open cost grows every destination to 64 buckets on
+  // its second merge: the first merge of each case reads one bucket, the
+  // later ones read the key-pruned buckets of a 64-bucket layout.
+  private val OpenCost = "spark.sql.files.openCostInBytes"
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set(OpenCost, "1")
+  }
+  override def afterAll(): Unit =
+    try spark.conf.unset(OpenCost) finally super.afterAll()
+
   private def assertSynced(agg: IncrementalAgg, w: MergeWriter): Unit =
     assert(viewOf(agg.read()) == viewOf(agg.recompute(w)))
 
   test("insert/update/group-move/soft-delete/toast/replay stay synced") {
     val path = tmpDir("iagg")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 8)
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
     val agg = new IncrementalAgg(spark, s"$path/agg", "grp", "v", Seq("id"))
 
     agg.applyBatch(w, changes(
@@ -87,7 +98,7 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("crash between merge and fold cannot lose or double-fold a batch") {
     val path = tmpDir("iagg-crash")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 4)
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
     val agg = new IncrementalAgg(spark, s"$path/agg", "grp", "v", Seq("id"))
 
     agg.applyBatch(w, changes(
@@ -165,7 +176,7 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("random interleaving stays synced after every batch") {
     val path = tmpDir("iagg-rand")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"), numBuckets = 8)
+    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
     val agg = new IncrementalAgg(spark, s"$path/agg2", "grp", "v", Seq("id"))
     val rnd = new scala.util.Random(4242)
     val groups = Vector("g0", "g1", "g2", "g3")

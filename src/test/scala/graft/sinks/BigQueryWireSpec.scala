@@ -205,7 +205,7 @@ class BigQueryWireSpec extends SparkSpec {
       loader.loadBatch(b2(), tmpDir("bq_stage2"))
 
       val native = new MergeWriter(spark, tmpDir("bq_native") + "/t",
-        Seq("id"), numBuckets = 4)
+        Seq("id"))
       native.merge(b1()); native.merge(b2())
       assert(snap(bq.stub.table("wh_dst")) == snap(native.read()),
         snap(bq.stub.table("wh_dst")).mkString("\n"))
@@ -281,7 +281,7 @@ class BigQueryWireSpec extends SparkSpec {
       loader.loadBatch(b2(), s"$base/2")
 
       val native = new MergeWriter(spark, tmpDir("ld_native") + "/t",
-        Seq("id"), numBuckets = 4)
+        Seq("id"))
       native.merge(b1()); native.merge(b2())
       assert(snap(bq.stub.table("ld_dst")) == snap(native.read()),
         snap(bq.stub.table("ld_dst")).mkString("\n"))

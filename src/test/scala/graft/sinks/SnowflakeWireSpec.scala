@@ -152,7 +152,7 @@ class SnowflakeWireSpec extends SparkSpec {
       loader.loadBatch(b2(), tmpDir("sf_stage2"))
 
       val native = new MergeWriter(spark, tmpDir("sf_native") + "/t",
-        Seq("id"), numBuckets = 4)
+        Seq("id"))
       native.merge(b1()); native.merge(b2())
       assert(snap(sf.stub.table("wh_dst")) == snap(native.read()),
         snap(sf.stub.table("wh_dst")).mkString("\n"))
@@ -328,7 +328,7 @@ class SnowflakeWireSpec extends SparkSpec {
       loader.loadBatch(b2(), s"$base/2")
 
       val native = new MergeWriter(spark, tmpDir("cp_native") + "/t",
-        Seq("id"), numBuckets = 4)
+        Seq("id"))
       native.merge(b1()); native.merge(b2())
       assert(snap(sf.stub.table("cp_dst")) == snap(native.read()),
         snap(sf.stub.table("cp_dst")).mkString("\n"))

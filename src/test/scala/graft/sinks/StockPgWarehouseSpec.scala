@@ -71,7 +71,7 @@ class StockPgWarehouseSpec extends SparkSpec {
 
   private def nativeResult(): Snap = {
     val w = new MergeWriter(spark, tmpDir("spg_native") + "/t",
-      Seq("id"), numBuckets = 4)
+      Seq("id"))
     w.merge(b1(), hardDelete = false)
     w.merge(b2(), hardDelete = false)
     w.read().collect().map { r =>

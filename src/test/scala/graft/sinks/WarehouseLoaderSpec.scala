@@ -58,7 +58,7 @@ class WarehouseLoaderSpec extends SparkSpec {
 
   private def nativeResult(hardDelete: Boolean): Set[(Long, String, Any, Long, Boolean)] = {
     val w = new MergeWriter(spark, tmpDir("wl_native") + "/t",
-      Seq("id"), numBuckets = 4)
+      Seq("id"))
     w.merge(b1(), hardDelete); w.merge(b2(), hardDelete)
     snap(w.read())
   }
@@ -159,7 +159,7 @@ class WarehouseLoaderSpec extends SparkSpec {
       (2L, null, null, 200L, true, Seq("name", "v")),
       (3L, "c", 30L, 200L, false, Nil))
     val w = new MergeWriter(spark, tmpDir("wl_chnat") + "/t",
-      Seq("id"), numBuckets = 4)
+      Seq("id"))
     w.merge(b1(), hardDelete = true); w.merge(chB2, hardDelete = true)
 
     val t = MergeTarget("ch_dst", "ch_stg", Seq("id"), payload)
