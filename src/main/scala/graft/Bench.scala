@@ -1,5 +1,14 @@
 package graft
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, Paths,
+  StandardOpenOption}
+import scala.util.control.NonFatal
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -85,8 +94,81 @@ object Bench {
         System.err.println(s"[bench] cannot write $out: ${e.getMessage}")
       }
     }
+    try structure(spark, sfDir, cpus) catch { case NonFatal(e) =>
+      System.err.println(s"[bench] structural pass failed: ${e.getMessage}")
+    }
     println(s"""{"metric":"total_compact","value":$total,"unit":"sec",""" +
       s""""n":${results.size},"sf":"$sfDir","full_line":"BENCH_out.json"}""")
     spark.stop()
+  }
+
+  /** Jobs, stages, tasks and shuffle bytes, totalled between resets. */
+  private final class Tally extends SparkListener {
+    @volatile var jobs, stages, tasks, shuffleRead, shuffleWrite = 0L
+    def reset(): Unit = {
+      jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages += 1
+      tasks += e.stageInfo.numTasks
+      Option(e.stageInfo.taskMetrics).foreach { m =>
+        shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+      }
+    }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The structural pass: after the timed loop, each query runs once more,
+    * untimed, under a listener, with the same sweep between queries. Per
+    * query it records jobs, stages, tasks, shuffle read/write bytes and the
+    * exchanges (shuffle, broadcast, reused) of the final adaptive plan,
+    * subqueries included. Unlike wall time these counts are deterministic,
+    * so `tools/bench_diff.py` compares two such files exactly. Each run
+    * writes its own `bench-structure/<utc>-c<cpus>-<sf>.json`; an existing
+    * file is never overwritten. */
+  private def structure(spark: SparkSession, sfDir: String,
+      cpus: String): Unit = {
+    val sc = spark.sparkContext
+    val tally = new Tally
+    sc.addSparkListener(tally)
+    val entries = SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) =>
+        GraftListenerBus.drain(sc)
+        tally.reset()
+        val exchanges = try {
+          val qe = fn(spark, sfDir).queryExecution
+          qe.toRdd.count()
+          Plans.collectWithSubqueries(qe.executedPlan) {
+            case _: Exchange | _: ReusedExchangeExec => ()
+          }.size.toString
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          "null"
+        }
+        GraftListenerBus.drain(sc)
+        graft.queries.SharedStages.sweep(spark)
+        s""""$name":{"jobs":${tally.jobs},"stages":${tally.stages},""" +
+          s""""tasks":${tally.tasks},"exchanges":$exchanges,""" +
+          s""""shuffle_read_bytes":${tally.shuffleRead},""" +
+          s""""shuffle_write_bytes":${tally.shuffleWrite}}"""
+    }
+    val utc = java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd'T'HHmmss'Z'")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val body = (s"""{"kind":"bench_structure","utc":"$utc","cpus":$cpus,""" +
+      s""""sf":"$sfDir","queries":${entries.mkString("{", ",", "}")}}""" +
+      "\n").getBytes(UTF_8)
+    val dir = Files.createDirectories(Paths.get("bench-structure"))
+    val sf = Paths.get(sfDir).getFileName
+    val out = Iterator.from(0).map { i =>
+      dir.resolve(s"$utc-c$cpus-$sf${if (i == 0) "" else s"-$i"}.json")
+    }.find { p =>
+      try { Files.write(p, body, StandardOpenOption.CREATE_NEW); true }
+      catch { case _: FileAlreadyExistsException => false }
+    }.get
+    System.err.println(s"[bench] structure: $out")
   }
 }

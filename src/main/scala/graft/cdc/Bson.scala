@@ -188,7 +188,8 @@ object Bson {
   }
 
   // one shared immutable formatter — building one per value dominated the
-  // decode profile (measured via q_bson_normalize MicroBench)
+  // decode profile of q_bson_normalize (NOTES.md "Harness-measured
+  // choices")
   private val Rfc3339Seconds = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss")
     .withZone(java.time.ZoneOffset.UTC)

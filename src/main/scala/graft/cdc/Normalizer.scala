@@ -72,18 +72,17 @@ object Normalizer {
       split(col(RawTable.UnchangedToastColumns), ","))
       .otherwise(array().cast("array<string>"))
 
-    val parsed = raw
-      .withColumn("_payload",
-        from_json(col(RawTable.Data), cfg.payloadSchema))
-      .withColumn("_match",
-        from_json(col(RawTable.MatchData), cfg.payloadSchema))
-      .withColumn("_toast", toastArr)
+    // One projection per step: every `withColumn` re-analyzes the whole
+    // plan, and this plan is rebuilt for every micro-batch.
+    val parsed = raw.select(col("*"),
+      from_json(col(RawTable.Data), cfg.payloadSchema).as("_payload"),
+      from_json(col(RawTable.MatchData), cfg.payloadSchema).as("_match"),
+      toastArr.as("_toast"))
 
     // Key columns: deletes carry the key in match data only.
-    val keyed = cfg.pkColumns.foldLeft(parsed) { (df, k) =>
-      df.withColumn(s"_pk_$k",
-        coalesce(col(s"_payload.$k"), col(s"_match.$k")))
-    }
+    val keyed = parsed.select(col("*") +: cfg.pkColumns.map(k =>
+      coalesce(col(s"_payload.$k"), col(s"_match.$k")).as(s"_pk_$k"))
+      : _*)
 
     // PK-changing update → synthesize a delete of the OLD key at version−1,
     // keyed on the old (match) image.
@@ -91,16 +90,16 @@ object Normalizer {
       .map(k => col(s"_match.$k").isNotNull &&
         !(col(s"_match.$k") <=> col(s"_payload.$k")))
       .reduce(_ || _)
-    val oldKeyDeletes = cfg.pkColumns.foldLeft(
-      keyed
-        .filter(col(RawTable.RecordType) === ChangeRecord.TypeUpdate &&
-          pkChanged)
-        .withColumn(RawTable.RecordType, lit(ChangeRecord.TypeDelete))
-        .withColumn(RawTable.Timestamp, col(RawTable.Timestamp) - 1)) {
-      (df, k) => df.withColumn(s"_pk_$k", col(s"_match.$k"))
-    }
-    val withSynth = keyed.unionByName(
-      oldKeyDeletes.select(keyed.columns.toSeq.map(col): _*))
+    val synthCols = Map(
+      RawTable.RecordType -> lit(ChangeRecord.TypeDelete),
+      RawTable.Timestamp -> (col(RawTable.Timestamp) - 1)) ++
+      cfg.pkColumns.map(k => s"_pk_$k" -> col(s"_match.$k"))
+    val oldKeyDeletes = keyed
+      .filter(col(RawTable.RecordType) === ChangeRecord.TypeUpdate &&
+        pkChanged)
+      .select(keyed.columns.toSeq.map(c =>
+        synthCols.get(c).fold(col(c))(_.as(c))): _*)
+    val withSynth = keyed.unionByName(oldKeyDeletes)
 
     // Source-schema disambiguator: extracted from the embedded JSON
     // key (deletes carry it in the match image — their data is null).
@@ -130,23 +129,22 @@ object Normalizer {
     // Within-batch TOAST backfill. `present` distinguishes absent from null:
     // wrap present values in a struct so last(ignoreNulls) keeps nulls that
     // were really present.
-    val backfilled = valueCols.foldLeft(withSchema) { (df, c) =>
+    val wrapped = withSchema.select(col("*") +: valueCols.map { c =>
       val present =
         col(RawTable.RecordType) =!= ChangeRecord.TypeDelete &&
           !array_contains(col("_toast"), c)
-      df.withColumn(s"_wrap_$c",
-          when(present, struct(col(s"_payload.$c").as("v"))))
-        .withColumn(s"_val_$c",
-          last(col(s"_wrap_$c"), ignoreNulls = true).over(backfillFrame))
-    }
+      when(present, struct(col(s"_payload.$c").as("v"))).as(s"_wrap_$c")
+    }: _*)
 
     // Latest record per key wins — per (schema, pk) key when the
-    // disambiguator is on.
-    val ranked = backfilled
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(keyCols: _*)
-          .orderBy(col(RawTable.Timestamp).desc, col(RawTable.Uid).desc)))
-      .filter(col("_rn") === 1)
+    // disambiguator is on: the row with no successor in version order,
+    // whose running backfill has seen every earlier record. The backfill
+    // and the successor probe share one window, so one sort serves both.
+    val ranked = wrapped.select(col("*") +: (valueCols.map(c =>
+        last(col(s"_wrap_$c"), ignoreNulls = true).over(backfillFrame)
+          .as(s"_val_$c")) :+
+        lead(lit(true), 1).over(pkWindow).as("_next")): _*)
+      .filter(col("_next").isNull)
 
     val schemaOut =
       if (cfg.sourceSchemaColumn)

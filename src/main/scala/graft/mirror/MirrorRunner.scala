@@ -221,6 +221,32 @@ private[mirror] object EsIdScheme {
 private final case class BatchGroup(table: String, recordType: Int,
     records: Long, maxCheckpoint: Long, minCommitMicros: Long)
 
+private object BatchGroup {
+  private type Row = (String, Int, Long, Long, Long)
+
+  /** The groups of one batch in a single job with no shuffle: each
+    * partition folds its rows into at most tables × record types groups,
+    * and the driver folds those. */
+  def of(batch: DataFrame): Seq[BatchGroup] = {
+    import org.apache.spark.sql.Encoders
+    val enc = Encoders.tuple(Encoders.STRING, Encoders.scalaInt,
+      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+    fold(batch.select(col("destinationTable"), col("recordType"),
+        lit(1L), col("checkpointId"), col("commitTimeMicros"))
+      .as(enc).mapPartitions(fold(_))(enc).collect().iterator)
+      .map((BatchGroup.apply _).tupled).toSeq
+  }
+
+  private def fold(rows: Iterator[Row]): Iterator[Row] = {
+    val acc = scala.collection.mutable.LinkedHashMap.empty[(String, Int), Row]
+    rows.foreach { r =>
+      acc((r._1, r._2)) = acc.get((r._1, r._2)).fold(r)(a =>
+        (a._1, a._2, a._3 + r._3, math.max(a._4, r._4), math.min(a._5, r._5)))
+    }
+    acc.valuesIterator
+  }
+}
+
 class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
 
   /** PEERDB_SOURCE_SCHEMA_AS_DESTINATION_COLUMN resolved against this
@@ -1141,12 +1167,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     // bounded by tables × record types. Record counts, never the
     // normalize plan, decide which tables have changes to merge; the
     // same rows feed the stats catalog.
-    val groups = batch0
-      .groupBy(col("destinationTable"), col("recordType"))
-      .agg(count(lit(1)), max(col("checkpointId")),
-        min(col("commitTimeMicros")))
-      .collect().toSeq.map(r => BatchGroup(r.getString(0), r.getInt(1),
-        r.getLong(2), r.getLong(3), r.getLong(4)))
+    val groups = BatchGroup.of(batch0)
     val changes = groups.filter(_.recordType <= ChangeRecord.TypeDelete)
     val changedTables = changes.map(_.table).toSet
 
@@ -1177,22 +1198,24 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
     // records after the delta in the same batch already carry the new
     // column; earlier ones parse to NULL — the reference's backfill-as-
     // null semantics. Driver-side collect is fine: deltas are rare and
-    // tiny.
-    raw.filter(col(RawTable.RecordType) === ChangeRecord.TypeRelation)
-      .select(RawTable.DestinationTable, RawTable.Data)
-      .collect().foreach { r =>
-        val table = r.getString(0)
-        val delta0 = SchemaEvolution.deltaFromJson(r.getString(1))
-        // Excluded columns re-announced by a RelationRecord stay excluded
-        // (isAddedColumnAndNotExcluded, cdc.go:1327-1334).
-        val exclude = writers.get(table)
-          .map(_._1.excludeColumns).getOrElse(Set.empty)
-        val delta = delta0.copy(addedColumns =
-          delta0.addedColumns.filterNot(c => exclude.contains(c.name)))
-        if (delta.addedColumns.nonEmpty)
-          liveSchemas.updateWith(table)(
-            _.map(SchemaEvolution.apply(_, delta)))
-      }
+    // tiny, and the batch summary says whether there are any, so a batch
+    // without one launches no job for them.
+    if (groups.exists(_.recordType == ChangeRecord.TypeRelation))
+      raw.filter(col(RawTable.RecordType) === ChangeRecord.TypeRelation)
+        .select(RawTable.DestinationTable, RawTable.Data)
+        .collect().foreach { r =>
+          val table = r.getString(0)
+          val delta0 = SchemaEvolution.deltaFromJson(r.getString(1))
+          // Excluded columns re-announced by a RelationRecord stay excluded
+          // (isAddedColumnAndNotExcluded, cdc.go:1327-1334).
+          val exclude = writers.get(table)
+            .map(_._1.excludeColumns).getOrElse(Set.empty)
+          val delta = delta0.copy(addedColumns =
+            delta0.addedColumns.filterNot(c => exclude.contains(c.name)))
+          if (delta.addedColumns.nonEmpty)
+            liveSchemas.updateWith(table)(
+              _.map(SchemaEvolution.apply(_, delta)))
+        }
 
     // Fan out per destination table (the normalize loop walks the mirror's
     // table set, flowable_core.go:791+). Records for tables outside the

@@ -122,9 +122,10 @@ object PipelineQueries {
       // the same choice as the simhash bucket join: distributes a hot
       // bucket's K² pair work across tasks instead of serializing it in
       // one interpreted in-row expansion, and measured faster even on
-      // mild buckets (MicroBench minhash: 0.29s vs 0.34s). The band-key
-      // frame is tiny (bands × docs) — checkpoint it so the signature
-      // pipeline runs once, not once per join side.
+      // mild buckets (0.29s vs 0.34s, NOTES.md "Harness-measured
+      // choices"). The band-key frame is tiny (bands × docs) —
+      // checkpoint it so the signature pipeline runs once, not once per
+      // join side.
       val bands = sig
         .withColumn("bands", TF.minhashBands("sig", 8, 4))
         .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))

@@ -209,11 +209,11 @@ object TokenStats {
   }
 }
 
-/** The between-queries block sweep shared by Bench / MicroBench /
-  * Verify: free every persisted block EXCEPT the deliberately shared
-  * stages ([[TokenStats]] memos + [[WireFixtures]] capture bytes).
-  * One definition, so adding a new shared stage cannot silently be
-  * forgotten in one of the three harnesses (a missed keep-set entry
+/** The between-queries block sweep shared by Bench and Verify: free
+  * every persisted block EXCEPT the deliberately shared stages
+  * ([[TokenStats]] memos + [[WireFixtures]] capture bytes). One
+  * definition, so adding a new shared stage cannot silently be
+  * forgotten in one of the two harnesses (a missed keep-set entry
   * evicts the stage mid-session and it silently rebuilds per query). */
 object SharedStages {
   def sweep(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -580,9 +580,9 @@ object TpchQueries {
         .select(col("ok").as("ok3"), col("sk").as("sk3")).distinct()
       // shuffle_hash on the build sides: the semi/anti self-joins key on
       // the mid-cardinality order key — partition-wise hash maps replace
-      // the planner's per-side sorts (MicroBench: 0.97 → 0.87 s at sf0.1;
-      // same direction as the shingle-index joins, smaller margin since
-      // the keys here are longs, not strings)
+      // the planner's per-side sorts (0.97 → 0.87 s at sf0.1, NOTES.md
+      // "Harness-measured choices"; same direction as the shingle-index
+      // joins, smaller margin since the keys here are longs, not strings)
       l1
         .join(others.hint("shuffle_hash"),
           col("ok") === col("ok2") && col("sk") =!= col("sk2"),

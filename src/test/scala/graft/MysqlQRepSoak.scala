@@ -18,9 +18,9 @@ import graft.qrep.{LiveMysqlPull, MysqlClient}
   * number measures the full client path (handshake, bound range
   * queries, length-encoded cell decode, typed Row parse, Spark
   * ingestion, localCheckpoint) plus the fixture's encode, the same
-  * posture as KafkaSoak's in-process broker. Rows are generated
-  * per-request from the parsed BETWEEN range, so fixture memory is
-  * O(partition).
+  * posture as the Kafka sink specs' in-process broker. Rows are
+  * generated per-request from the parsed BETWEEN range, so fixture
+  * memory is O(partition).
   *
   * Measures (a) a full integer-watermark round, (b) a 10% increment,
   * (c) the idle probe floor, and (d) a string-watermark pull through

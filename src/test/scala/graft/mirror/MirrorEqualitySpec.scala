@@ -257,6 +257,63 @@ class MirrorEqualitySpec extends SparkSpec {
     assert(out2 == Map(1L -> "y", 2L -> "x"))
   }
 
+  test("jobs per mirror batch: a fixed budget, plus one for a relation " +
+    "record") {
+    import graft.cdc.{AddedColumn, ChangeLogBatch, SchemaEvolution,
+      TableSchemaDelta}
+    import graft.types.QKind
+    val wal = tmpDir("waljobs")
+    val base = tmpDir("mirrorjobs")
+    val cfg = MirrorConfig(wal, s"$base/raw", s"$base/dest",
+      s"$base/ckpt", Seq("id"), payloadSchema, destinationTable = "dest.t")
+    val runner = new MirrorRunner(spark, cfg)
+    def ins(cp: Long, id: Long, extra: String = "") = rec(cp, cp,
+      ChangeRecord.TypeInsert, s"""{"id":$id,"name":"n$id","v":$id$extra}""")
+    def upd(cp: Long, id: Long) = rec(cp, cp, ChangeRecord.TypeUpdate,
+      s"""{"id":$id,"name":"u$id","v":$cp}""", s"""{"id":$id}""")
+    def del(cp: Long, id: Long) =
+      rec(cp, cp, ChangeRecord.TypeDelete, null, s"""{"id":$id}""")
+    val relation = ChangeRecord(ChangeRecord.TypeRelation, 12, "12", 12000,
+      12, "public.t", "dest.t", SchemaEvolution.deltaToJson(TableSchemaDelta(
+        "public.t", "dest.t", Seq(AddedColumn("extra", QKind.QString)))),
+      null, Nil)
+    val batches = Seq(
+      Seq(ins(1, 1), ins(2, 2), ins(3, 3), upd(4, 1), del(5, 2)),
+      Seq(ins(6, 4), upd(7, 3), upd(8, 4), del(9, 1)),
+      Seq(ins(10, 5), upd(11, 3), relation, ins(13, 6, ""","extra":"x"""")))
+
+    // Only jobs of this thread's group count: another suite's leftover
+    // stream cannot leak into the budget.
+    val group = "mirror-batch-jobs"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val perBatch = try batches.zipWithIndex.map { case (records, i) =>
+      ChangeLogWal.append(wal, records)
+      val batch = ChangeLogBatch.read(spark, wal,
+        afterCp = records.head.checkpointId - 1,
+        untilCp = records.last.checkpointId)
+      org.apache.spark.GraftListenerBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try runner.syncAndNormalize(batch, batchId = i.toLong)
+      finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBus.drain(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(l)
+
+    assert(perBatch == Seq(4, 5, 6), "jobs per batch")
+    val out = runner.destination().collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[String]("extra")).toMap
+    assert(out == Map(3L -> null, 4L -> null, 5L -> null, 6L -> "x"))
+  }
+
   test("raw sync replay is idempotent (batch partition overwrite)") {
     import scala.jdk.CollectionConverters._
     val base = tmpDir("mirrorreplay")

@@ -1,6 +1,14 @@
 #!/usr/bin/env python3
-"""Compare two Bench JSON outputs (raw {"metric":...} lines or the
-driver's BENCH_r{N}.json wrapper): per-query deltas, regressions first.
+"""Compare two Bench outputs, per query.
+
+Wall time: two Bench JSON lines (raw {"metric":...} lines, BENCH_out.json,
+or a BENCH_r{N}.json wrapper holding the line in its "tail" field):
+per-query deltas, regressions first.
+
+Structure: two files Bench's structural pass wrote under bench-structure/:
+per-query deltas in jobs, stages, exchanges and shuffle bytes, increases
+first. A query whose job or exchange count rose (or that newly fails) is
+flagged, and the exit status is 1 when any query is flagged.
 
 Usage: python3 tools/bench_diff.py OLD NEW [--threshold 0.15]
 """
@@ -10,8 +18,13 @@ import re
 import sys
 
 
+STRUCTURE_KIND = "bench_structure"
+
+
 def load(path):
     text = open(path).read()
+    if STRUCTURE_KIND in text[:100]:
+        return json.loads(text)
     m = re.search(r'\{"metric".*', text)
     if m:
         try:
@@ -28,14 +41,52 @@ def load(path):
     return json.loads(m.group(1))
 
 
+def diff_structure(a, old, new):
+    oq, nq = old["queries"], new["queries"]
+    print(f"structure: old {a.old} (sf {old['sf']}, {old['cpus']} cpus)  "
+          f"new {a.new} (sf {new['sf']}, {new['cpus']} cpus)")
+    print(f"common {len(set(oq) & set(nq))}  only-old {len(set(oq) - set(nq))}"
+          f"  only-new {len(set(nq) - set(oq))}")
+    keys = ("jobs", "stages", "exchanges", "shuffle_read_bytes",
+            "shuffle_write_bytes")
+    rows = []
+    for q in set(oq) & set(nq):
+        o, n = oq[q], nq[q]
+        failed = n["exchanges"] is None and o["exchanges"] is not None
+        d = {k: (n[k] or 0) - (o[k] or 0) for k in keys}
+        if failed or any(d.values()):
+            flag = failed or d["jobs"] > 0 or d["exchanges"] > 0
+            rows.append((flag, q, o, n, d))
+    rows.sort(key=lambda r: (not r[0], *(-r[4][k] for k in keys), r[1]))
+    for k in ("jobs", "stages", "exchanges"):
+        print(f"totals {k}: {sum(oq[q][k] or 0 for q in oq)} -> "
+              f"{sum(nq[q][k] or 0 for q in nq)}")
+    for flag, q, o, n, d in rows:
+        cols = "  ".join(f"{k} {o[k]}->{n[k]} ({d[k]:+d})"
+                         for k in ("jobs", "stages", "exchanges"))
+        mb = lambda k: f"{(n[k] or 0) / 1e6:.2f} MB ({d[k]:+d} B)"
+        print(f"  {q:30s} {cols}  shuffle read {mb('shuffle_read_bytes')} "
+              f"write {mb('shuffle_write_bytes')}"
+              + ("  FLAG" if flag else ""))
+    flagged = sum(r[0] for r in rows)
+    print(f"flagged {flagged} (job or exchange count rose, or newly failed)")
+    return 1 if flagged else 0
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
     ap.add_argument("--threshold", type=float, default=0.15,
-                    help="seconds of delta worth printing")
+                    help="seconds of delta worth printing (wall time only)")
     a = ap.parse_args()
     old, new = load(a.old), load(a.new)
+    kinds = {isinstance(x, dict) and x.get("kind") == STRUCTURE_KIND
+             for x in (old, new)}
+    if len(kinds) > 1:
+        sys.exit("cannot compare a structure file with a wall-time file")
+    if kinds == {True}:
+        sys.exit(diff_structure(a, old, new))
     common = sorted(set(old) & set(new), key=lambda k: old[k] - new[k])
     print(f"common {len(common)}  only-old {len(set(old)-set(new))}  "
           f"only-new {len(set(new)-set(old))}")
