@@ -1,63 +1,84 @@
 package graft.cdc
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.RawTable
+import graft.util.FsText
 
-/** Parquet-backed MERGE INTO with hash-bucketed partition pruning.
+/** Parquet-backed MERGE INTO with hash-bucketed partition pruning, published
+  * by one atomic manifest write per merge.
   *
-  * The destination table lives as parquet partitioned by
-  * `_g_bucket = pmod(hash(pk...), n)`. A table starts as one bucket and
-  * keeps it while its stored bytes fit in one
-  * `spark.sql.files.openCostInBytes` (Spark's estimate of what opening one
-  * file costs, 4 MB by default); the first merge after it outgrows that
-  * rewrites it in [[MergeWriter.MaxBuckets]] = 64 buckets, the fixed count
-  * earlier writers used. Nothing records `n`: it is the smallest power of
-  * two above the highest `_g_bucket=` directory present (1 for a new
-  * table), so tables written with a fixed 64 buckets keep 64. After hard
-  * deletes empty the upper buckets the count read back can fall; any such
-  * count is consistent, because `pmod` by a power of two keeps the hash's
-  * low bits: a key stored in bucket b hashes to b at every power of two
-  * above b.
+  * The destination table lives as parquet under `_g_bucket=b` directories,
+  * `b = pmod(hash(pk...), n)`. Its commit point is one small manifest,
+  * `_graft_table.json` in the table directory, replaced atomically
+  * ([[graft.util.FsText.write]]). It holds the physical schema, the bucket
+  * count `n`, and each bucket's live files (paths relative to the table
+  * directory, so the directory can be moved whole) with their byte sizes.
+  * Readers scan exactly those files, built from the recorded sizes, so a
+  * read lists no directory and no listing cache can go stale.
   *
-  * Merging a (deduped) change set:
+  * A table starts as one bucket and keeps it while its recorded bytes fit
+  * in one `spark.sql.files.openCostInBytes` (Spark's estimate of what
+  * opening one file costs, 4 MB by default); the first merge after it
+  * outgrows that rewrites it in [[MergeWriter.MaxBuckets]] = 64 buckets.
+  * A key stored in bucket b hashes to b at every power of two above b, so
+  * a count read back from an old table's listing is consistent too.
   *
-  *   1. derive the current count from the listing, and grow it to 64 if
-  *      the stored table exceeds one open cost;
-  *   2. at a steady count above 1, compute the affected bucket set from
-  *      the incoming batch (driver-side small list) and read only those
-  *      buckets (partition pruning — the scan never touches clean
-  *      buckets); with one bucket, or when the count grows, read every
-  *      bucket;
-  *   3. latest-version-wins anti/union combine, with TOAST-absent columns
-  *      resolved by coalescing to the destination value
+  * Every merge of a (deduped) change set takes the same four steps:
+  *
+  *   1. write: at a steady count above 1, read only the buckets of the
+  *      incoming keys (the rest are never scanned); with one bucket, or
+  *      when the count grows, read every bucket. Combine latest-version-
+  *      wins, TOAST-absent columns coalescing to the destination value
   *      (the `coalesce`-by-presence strategy replacing the reference's
   *      per-combination UPDATE branches, snowflake merge_stmt_generator
-  *      .go:29-225);
-  *   4. at a steady count, overwrite the bucket partitions written
-  *      (dynamic partition overwrite) and, under hard delete, remove read
-  *      buckets that received no rows; when the count grows, stage the
-  *      whole new layout beside the table and publish it (below).
+  *      .go:29-225), and append the result: new, uniquely named files
+  *      beside the old ones;
+  *   2. find the new files: list the written bucket directories and take
+  *      away the files the manifest already names;
+  *   3. commit: write a manifest that keeps the untouched buckets' files
+  *      and names the new ones in place of the read buckets' files;
+  *   4. clean up: delete the superseded files, and bucket directories
+  *      left with none.
+  *
+  * What a crash leaves: before step 3, the old manifest stands and the new
+  * files are orphans; after it, the new manifest stands and superseded
+  * files may remain. Either way readers see one whole version, and the
+  * writer deletes every file the manifest does not name before it next
+  * writes (on its first merge, and after a merge that failed). Re-applying
+  * the same batch is idempotent: version comparison keeps the newest row,
+  * ties break toward the incoming row, byte-identical on replay
+  * (at-least-once safety, core.go:204-206). A table's first merge has no
+  * manifest to protect: its files are committed by the manifest it ends
+  * with, and a crash before that leaves them to be read as below.
+  *
+  * Between merges the directory holds exactly its live files, so plain
+  * `spark.read.parquet(dir)` readers keep working; one that lists during
+  * a merge can see new files beside the ones they supersede, or miss a
+  * file step 4 deletes. A manifest read whose scan overlaps step 4 can
+  * fail on a deleted file; it never returns wrong rows.
+  *
+  * A table with bucket directories but no manifest (written before
+  * manifests existed) is read from one listing, its schema from the old
+  * `_graft_schema.json` when present, else from a footer union, until its
+  * first merge writes a manifest.
   *
   * A batch touching k distinct keys of a table in N buckets rewrites at
-  * most min(k, N) buckets. A one-bucket table is at most one open cost
-  * and is rewritten whole; at 64 buckets the work is proportional to the
-  * change volume, not the table size. Each bucket costs a fixed listing,
-  * read, write and commit (~15-20 ms locally, NOTES.md), which is why a
-  * small table is not spread over 64 of them.
-  *
-  * Re-applying the same batch is idempotent: version comparison keeps the
-  * newest row, ties break toward the incoming row which is byte-identical
-  * on replay (at-least-once safety, core.go:204-206). A growing merge
-  * moves rows between buckets, so it cannot replace buckets in place: it
-  * writes the new layout under `_g_grow/` (hidden from scans by its `_`
-  * prefix), and the staged `_SUCCESS` is its commit. Publishing removes
-  * the old bucket directories, moves the staged ones in, and drops the
-  * staging directory; every later listing first finishes a committed
-  * publish a crash interrupted, or discards an uncommitted stage. Other
-  * processes reading the table during a publish can still see it
-  * partly moved (ROADMAP direction 3).
+  * most min(k, N) buckets. A one-bucket table is at most one open cost and
+  * is rewritten whole; at 64 buckets the work is proportional to the change
+  * volume, not the table size. Each bucket costs a fixed read, write and
+  * delete (~15-20 ms locally, NOTES.md), which is why a small table is not
+  * spread over 64 of them.
   *
   * Why not a real lakehouse MERGE: zero-dependency constraint (no Delta on
   * the classpath); this reproduces the same pruning + rewrite shape with
@@ -80,8 +101,18 @@ final class MergeWriter(
       * rewritten bucket keep their previous stamp. */
     syncedAtCol: Option[String] = None,
     nowMicros: () => Long = () => System.currentTimeMillis() * 1000L) {
+  import MergeWriter._
 
   private val BucketCol = "_g_bucket"
+
+  /** Called as a merge passes each [[MergeWriter.Step]]; specs use it to
+    * crash or pause a merge there. */
+  @volatile private[graft] var stepHook: Step => Unit = _ => ()
+
+  /** Whether the bucket directories may hold files no manifest names: true
+    * until this writer's first merge has swept them, and again after a
+    * merge that failed. */
+  private var dirty = true
 
   /** Internal → physical column names, applied just before a write. */
   private def toPhysical(df: DataFrame): DataFrame =
@@ -93,10 +124,9 @@ final class MergeWriter(
     if (softDeleteCol == RawTable.IsDeleted) df
     else df.withColumnRenamed(softDeleteCol, RawTable.IsDeleted)
 
-  private def logicalSchema(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
+  private def logicalSchema(s: StructType): StructType =
     if (softDeleteCol == RawTable.IsDeleted) s
-    else org.apache.spark.sql.types.StructType(s.fields.map(f =>
+    else StructType(s.fields.map(f =>
       if (f.name == softDeleteCol) f.copy(name = RawTable.IsDeleted)
       else f))
 
@@ -104,198 +134,154 @@ final class MergeWriter(
 
   // All table metadata I/O goes through the Hadoop FileSystem API: the
   // destination at scale is HDFS/object storage, not the driver's disk.
-  private def fs: org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = new Path(tablePath).getFileSystem(conf)
+  private def root = fs.makeQualified(new Path(tablePath))
+  private def manifest = new Path(tablePath, "_graft_table.json").toString
+  private def bucketDir(b: Int) = new Path(root, s"$BucketCol=$b")
 
-  /** Bucket id → directory of every `_g_bucket=` directory under `d`. */
-  private def bucketsUnder(d: org.apache.hadoop.fs.Path)
-      : Map[Int, org.apache.hadoop.fs.Path] = {
-    val f = fs
-    if (!f.exists(d)) Map.empty
-    else f.listStatus(d).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(s"$BucketCol="))
-      .map(s => s.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
-        s.getPath)
-      .toMap
-  }
+  /** Ids of the bucket directories present. */
+  private def bucketIds: Seq[Int] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$BucketCol="))
+      .map(_.stripPrefix(s"$BucketCol=").toInt)
 
-  /** Bucket id → directory of every stored bucket, once any growth a
-    * crash interrupted is finished or discarded. */
-  private def bucketDirs: Map[Int, org.apache.hadoop.fs.Path] = {
-    publishGrowth()
-    bucketsUnder(new org.apache.hadoop.fs.Path(tablePath))
-  }
+  /** Data files under bucket `b`'s directory, relative path → bytes. */
+  private def listBucket(b: Int): Map[String, Long] =
+    (try fs.listStatus(bucketDir(b)).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil })
+      .filter(s => s.isFile && !hidden(s.getPath.getName))
+      .map(s => s"$BucketCol=$b/${s.getPath.getName}" -> s.getLen).toMap
 
-  /** Where a growing merge stages the new layout. */
-  private def growDir = new org.apache.hadoop.fs.Path(tablePath, "_g_grow")
-
-  /** Publishes a staged layout, or drops one that never committed. Each
-    * step is safe to repeat after a crash: the old bucket directories are
-    * removed once (a marker in the stage records it), then each staged
-    * bucket directory is renamed into the table, then the stage goes. */
-  private def publishGrowth(): Unit = {
-    val f = fs
-    val g = growDir
-    if (f.exists(g)) {
-      if (f.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS"))) {
-        val oldRemoved = new org.apache.hadoop.fs.Path(g, "_old_removed")
-        if (!f.exists(oldRemoved)) {
-          bucketsUnder(new org.apache.hadoop.fs.Path(tablePath)).values
-            .foreach(f.delete(_, true))
-          f.create(oldRemoved, true).close()
-        }
-        bucketsUnder(g).values.foreach { p =>
-          if (!f.rename(p, new org.apache.hadoop.fs.Path(tablePath, p.getName)))
-            throw new java.io.IOException(s"cannot move $p into $tablePath")
-        }
-      }
-      f.delete(g, true)
+  /** The last committed version: the manifest, or for a table written
+    * before manifests, one listing of its bucket directories. None for a
+    * table never written. */
+  private[cdc] def snapshot: Option[Snapshot] =
+    FsText.read(manifest, conf).map(Snapshot.fromJson).orElse {
+      val files = bucketIds.map(b => b -> listBucket(b)).toMap
+      val schemaFile = FsText.read(s"$tablePath/_graft_schema.json", conf)
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      if (files.isEmpty && schemaFile.isEmpty) None
+      else Some(Snapshot(
+        schemaFile.getOrElse(spark.read.option("mergeSchema", "true")
+          .parquet(tablePath).drop(BucketCol).schema),
+        if (files.isEmpty) 1
+        else Integer.highestOneBit(files.keys.max * 2 + 1),
+        files.filter(_._2.nonEmpty)))
     }
-  }
 
-  /** Bucket count of the stored layout: the smallest power of two above
-    * the highest bucket id present. */
-  private def countOf(ids: Iterable[Int]): Int =
-    if (ids.isEmpty) 1 else Integer.highestOneBit(ids.max * 2 + 1)
+  private def committed: Snapshot = snapshot.getOrElse(
+    throw new IllegalStateException(s"$tablePath: table never written"))
 
-  /** Bucket count the next merge writes: [[MergeWriter.MaxBuckets]] once
-    * the stored table exceeds one `openCostInBytes`, else the current
-    * count. The size is one summary call, not a listing per bucket. */
-  private def targetCount(sess: SparkSession, current: Int): Int =
-    if (current < MergeWriter.MaxBuckets &&
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(tablePath))
-          .getLength > sess.sessionState.conf.filesOpenCostInBytes)
-      MergeWriter.MaxBuckets
-    else current
+  def exists: Boolean = snapshot.isDefined
 
-  def exists: Boolean = bucketDirs.nonEmpty
-
-  private def schemaFile =
-    new org.apache.hadoop.fs.Path(tablePath, "_graft_schema.json")
-
-  private def rememberSchema(df: DataFrame): Unit = {
-    val out = fs.create(schemaFile, true)
-    try out.write(df.drop(BucketCol).schema.json
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def storedSchema: Option[org.apache.spark.sql.types.StructType] = {
-    val f = fs
-    if (!f.exists(schemaFile)) None
-    else {
-      val in = f.open(schemaFile)
-      val json =
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
-
-  /** Scan of the stored table that never trusts single-footer inference.
-    * After an ADD COLUMN, buckets untouched since the widening still hold
-    * narrow files; plain inference picks ONE arbitrary footer and can make
-    * the widened column invisible (dropping its values on the next merge).
-    * The persisted `_graft_schema.json` is the widest schema as of the last
-    * write — use it outright (also skips the footer-read job entirely);
-    * tables predating the schema file fall back to a distributed
-    * mergeSchema footer union. */
-  private def tableScan(sess: SparkSession): DataFrame = {
-    val reader = sess.read.option("basePath", tablePath)
-    toLogical(storedSchema match {
-      case Some(s) =>
-        reader.schema(s.add(BucketCol,
-          org.apache.spark.sql.types.IntegerType)).parquet(tablePath)
-      case None =>
-        reader.option("mergeSchema", "true").parquet(tablePath)
-    })
-  }
-
-  /** The persisted widest schema of the stored table (payload + engine
-    * meta columns, INTERNAL names), if it has ever been written — lets a
-    * restarted mirror recover post-ADD-COLUMN payload schemas its static
-    * config predates. */
-  def currentSchema: Option[org.apache.spark.sql.types.StructType] =
-    storedSchema.map(logicalSchema)
+  /** The widest schema of the stored table (payload + engine meta columns,
+    * INTERNAL names), if it has ever been written — lets a restarted
+    * mirror recover post-ADD-COLUMN payload schemas its static config
+    * predates. */
+  def currentSchema: Option[StructType] =
+    snapshot.map(s => logicalSchema(s.schema))
 
   /** Current table state (all buckets); typed-empty after a full hard
-    * delete (schema persisted alongside the data). */
-  def read(): DataFrame =
-    if (exists) tableScan(spark).drop(BucketCol)
-    else {
-      val schema = storedSchema.getOrElse(throw new IllegalStateException(
-        s"no data and no $schemaFile — table never written"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        logicalSchema(schema))
-    }
+    * delete. */
+  def read(): DataFrame = scan(spark, committed, None)
 
   /** Affected-rows read: the stored rows whose primary key appears in
-    * `keys`, with the same bucket-level partition pruning the merge path
-    * uses — only the buckets containing a requested key are listed and
-    * scanned, so the cost tracks the key set, not the table size. The
-    * incremental-view maintenance path ([[graft.mirror.IncrementalAgg]])
-    * reads before/after images through this. */
+    * `keys`, scanning only the buckets containing a requested key, so the
+    * cost tracks the key set, not the table size. The incremental-view
+    * maintenance path ([[graft.mirror.IncrementalAgg]]) reads before/after
+    * images through this. */
   def readForKeys(keys: DataFrame): DataFrame = {
-    val dirs = bucketDirs
-    if (dirs.isEmpty) read()
-    else {
-      val k = keys.select(pkColumns.map(col): _*).distinct()
-      val n = countOf(dirs.keys)
-      val buckets = if (n == 1) None else Some(bucketsOf(k, n))
-      scan(keys.sparkSession, buckets).drop(BucketCol)
-        .join(k, pkColumns, "left_semi")
-    }
+    val s = committed
+    val k = keys.select(pkColumns.map(col): _*).distinct()
+    val buckets = if (s.buckets == 1) None else Some(bucketsOf(k, s.buckets))
+    scan(keys.sparkSession, s, buckets).join(k, pkColumns, "left_semi")
   }
 
   /** Bucket ids at count `n` of the keys in `df` (driver-side: ≤ n ints). */
   private def bucketsOf(df: DataFrame, n: Int): Seq[Int] =
     df.select(bucketOf(n)).distinct().collect().map(_.getInt(0)).toSeq
 
-  /** Stored rows of the given buckets — a partition-pruned scan: the isin
-    * filter on the partition column means only those bucket dirs are
-    * listed/read — or of every bucket. */
-  private def scan(sess: SparkSession, buckets: Option[Seq[Int]])
-      : DataFrame =
-    buckets.fold(tableScan(sess))(b =>
-      tableScan(sess).filter(col(BucketCol).isin(b.map(Integer.valueOf): _*)))
+  /** The version's files of the given buckets, or of every bucket, as one
+    * parquet scan in the version's schema. The scan is built from the
+    * recorded files and sizes, as Spark's `MetadataLogFileIndex` does for a
+    * file sink, so it lists nothing. */
+  private def scan(sess: SparkSession, s: Snapshot,
+      buckets: Option[Seq[Int]]): DataFrame = {
+    val r = root
+    val files = buckets.fold(s.files.values.toSeq)(_.flatMap(s.files.get))
+      .flatten.map { case (rel, len) =>
+        new FileStatus(len, false, 0, 0, 0, new Path(r, rel))
+      }
+    toLogical(sess.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestIndex(r, files), new StructType(), s.schema, None,
+      new ParquetFileFormat, Map.empty)(sess)))
+  }
+
+  /** Deletes what a crashed or failed merge left under the bucket
+    * directories: every file `s` does not name, and directories left
+    * without one. */
+  private def sweep(s: Snapshot): Unit = bucketIds.foreach { b =>
+    val live = s.files.getOrElse(b, Map.empty)
+    if (live.isEmpty) fs.delete(bucketDir(b), true)
+    else (listBucket(b).keySet -- live.keySet)
+      .foreach(f => fs.delete(new Path(root, f), false))
+  }
 
   /** Merge one normalized change set (one row per key, with
     * `_peerdb_version`, `_peerdb_is_deleted`, `_absent_cols`).
     * `hardDelete=true` drops deleted keys; otherwise they persist as
     * soft-delete tombstones. */
   def merge(changes: DataFrame, hardDelete: Boolean = false): Unit = {
+    stepHook(Begin)
     // Inside foreachBatch the batch DataFrame belongs to a CLONED session
-    // — do the reads (and the listing-cache refresh) on THAT session.
+    // — do the reads on THAT session.
     val sess = changes.sparkSession
-    val dataCols = changes.columns.toSeq
-      .filterNot(Seq(Normalizer.AbsentCols).contains)
-    val dirs = bucketDirs
-
-    if (dirs.isEmpty) {
-      val resolved = toPhysical(stampSynced(finishRow(
-        changes.withColumn(BucketCol, bucketOf(1)), hardDelete)))
-      resolved.write
-        .partitionBy(BucketCol)
-        .mode(SaveMode.Overwrite)
-        .parquet(tablePath)
-      rememberSchema(resolved)
-      return
-    }
-
-    val current = countOf(dirs.keys)
-    val n = targetCount(sess, current)
+    val before = snapshot
+    if (dirty) before.foreach(sweep)
+    dirty = true
+    val current = before.fold(1)(_.buckets)
+    val n =
+      if (current < MaxBuckets && before.exists(_.bytes >
+          sess.sessionState.conf.filesOpenCostInBytes)) MaxBuckets
+      else current
     // With one bucket there is nothing to prune, and a growing count
     // moves rows between buckets: both read (and rewrite) every bucket.
     // Otherwise only the buckets of the incoming keys are read.
     val pruned =
       if (n > 1 && n == current) Some(bucketsOf(changes, n)) else None
-    val affected = pruned.getOrElse(dirs.keys.toSeq)
-    val existingStored = scan(sess, pruned)
+    val resolved = before.fold(stampSynced(changes))(s =>
+      combine(changes, scan(sess, s, pruned)))
+    val out = toPhysical(finishRow(
+      resolved.withColumn(BucketCol, bucketOf(n)), hardDelete))
+    out.write.mode(SaveMode.Append).partitionBy(BucketCol).parquet(tablePath)
+    stepHook(Written)
+
+    val prior = before.fold(Map.empty[Int, Map[String, Long]])(_.files)
+    val replaced = pruned.getOrElse(prior.keys.toSeq)
+    val written = pruned.getOrElse(0 until n).map(b =>
+      b -> (listBucket(b) -- prior.getOrElse(b, Map.empty).keySet))
+      .filter(_._2.nonEmpty)
+    val live = prior -- replaced ++ written
+    FsText.write(manifest, Snapshot(
+      StructType(out.schema.filterNot(_.name == BucketCol)), n, live).toJson,
+      conf)
+    stepHook(Committed)
+
+    prior.filter(b => replaced.contains(b._1)).foreach { case (b, old) =>
+      if (live.contains(b))
+        old.keys.foreach(f => fs.delete(new Path(root, f), false))
+      else fs.delete(bucketDir(b), true)
+    }
+    stepHook(Cleaned)
+    dirty = false
+  }
+
+  /** Latest version wins; on equality the incoming row wins (idempotent
+    * replay). TOAST-absent incoming columns take the destination value. */
+  private def combine(changes: DataFrame, existingStored: DataFrame)
+      : DataFrame = {
     // Schema evolution: a TableSchemaDelta-widened batch carries columns
     // the stored parquet predates — null-fill them (alignFrame) so the
     // dst side of the merge resolves instead of throwing. Columns only
@@ -304,22 +290,20 @@ final class MergeWriter(
     val existing = SchemaEvolution.alignFrame(
       existingStored, changes.drop(Normalizer.AbsentCols).schema)
     val retainedCols = existingStored.columns.toSeq
-      .filterNot(changes.columns.contains).filterNot(_ == BucketCol)
+      .filterNot(changes.columns.contains)
       .filterNot(syncedAtCol.contains) // handled row-accurately below
-
-    val valueCols = dataCols
+    val valueCols = changes.columns.toSeq
+      .filterNot(Seq(Normalizer.AbsentCols).contains)
       .filterNot(pkColumns.contains)
       .filterNot(Seq(RawTable.Version, RawTable.IsDeleted).contains)
 
-    // Latest version wins; on equality the incoming row wins (idempotent
-    // replay). TOAST-absent incoming columns take the destination value.
     val joined = changes.as("src").join(
       existing.as("dst"), pkColumns, "full_outer")
     val srcWins = col(s"src.${RawTable.Version}").isNotNull &&
       (col(s"dst.${RawTable.Version}").isNull ||
         col(s"src.${RawTable.Version}") >= col(s"dst.${RawTable.Version}"))
 
-    val merged = joined.select(
+    joined.select(
       pkColumns.map(col) ++ valueCols.map { c =>
         when(srcWins,
           when(array_contains(
@@ -343,59 +327,6 @@ final class MergeWriter(
         when(srcWins, col(s"src.${RawTable.IsDeleted}"))
           .otherwise(col(s"dst.${RawTable.IsDeleted}"))
           .as(RawTable.IsDeleted)): _*)
-
-    val resolved = toPhysical(finishRow(
-      merged.withColumn(BucketCol, bucketOf(n)), hardDelete))
-
-    if (n != current) {
-      // Growth: the staged layout holds every surviving row, so publishing
-      // it replaces the old layout whole (see publishGrowth).
-      resolved.write
-        .partitionBy(BucketCol)
-        .mode(SaveMode.Overwrite)
-        .parquet(growDir.toString)
-      rememberSchema(resolved)
-      publishGrowth()
-    } else {
-      // Surviving buckets must be computed BEFORE the write: `resolved`
-      // reads the stored table lazily, and the overwrite below replaces
-      // those files — a post-write re-execution of the plan would resolve
-      // the old file listing and die with FILE_NOT_EXIST.
-      val survived: Set[Int] =
-        if (hardDelete)
-          resolved.select(BucketCol).distinct()
-            .collect().map(_.getInt(0)).toSet
-        else Set.empty
-
-      // Dynamic overwrite: only the affected bucket partitions are
-      // replaced. The per-write option outranks the session conf, so no
-      // shared session state is touched.
-      resolved.write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BucketCol)
-        .mode(SaveMode.Overwrite)
-        .parquet(tablePath)
-
-      rememberSchema(resolved)
-
-      // Dynamic overwrite only replaces partitions PRESENT in the output:
-      // a bucket whose every key was hard-deleted writes no rows and would
-      // keep its stale file — clear those partition dirs explicitly.
-      if (hardDelete) {
-        val f = fs
-        affected.filterNot(survived).foreach { b =>
-          f.delete(
-            new org.apache.hadoop.fs.Path(s"$tablePath/$BucketCol=$b"), true)
-        }
-      }
-    }
-
-    // The overwrite, the stale-bucket dir removal and a published growth
-    // replace files a prior scan of this path may have cached in the
-    // session's shared file-listing cache; without an explicit refresh a
-    // later read can resolve the replaced files and fail with
-    // FILE_NOT_EXIST.
-    sess.catalog.refreshByPath(tablePath)
   }
 
   private def finishRow(df: DataFrame, hardDelete: Boolean): DataFrame = {
@@ -412,4 +343,63 @@ object MergeWriter {
   /** Bucket count of a table that has outgrown one openCostInBytes,
     * however large it grows. */
   val MaxBuckets = 64
+
+  /** The points of a merge its step hook is called at. */
+  sealed trait Step
+  /** Entered; nothing written yet. */
+  case object Begin extends Step
+  /** New files written beside the old ones; not committed. */
+  case object Written extends Step
+  /** The new manifest is in place; superseded files not yet deleted. */
+  case object Committed extends Step
+  /** Superseded files deleted. */
+  case object Cleaned extends Step
+
+  /** Names Spark's own listing skips (`_SUCCESS`, `.crc`, temp files). */
+  private def hidden(name: String) =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** One committed version of a table: its physical schema (without the
+    * bucket column), its bucket count, and each bucket's live files as
+    * path relative to the table directory → bytes. */
+  private[cdc] final case class Snapshot(schema: StructType, buckets: Int,
+      files: Map[Int, Map[String, Long]]) {
+    def bytes: Long = files.values.flatMap(_.values).sum
+
+    def toJson: String = Snapshot.json.writeValueAsString(Map(
+      "schema" -> Snapshot.json.readTree(schema.json),
+      "buckets" -> buckets, "files" -> files))
+  }
+
+  private[cdc] object Snapshot {
+    private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+    def fromJson(text: String): Snapshot = {
+      val o = json.readTree(text)
+      def entries(n: com.fasterxml.jackson.databind.JsonNode) =
+        n.properties().asScala.map(e => e.getKey -> e.getValue)
+      Snapshot(
+        DataType.fromJson(o.get("schema").toString).asInstanceOf[StructType],
+        o.get("buckets").asInt,
+        entries(o.get("files")).map { case (b, fs) =>
+          b.toInt -> entries(fs).map { case (p, len) => p -> len.asLong }.toMap
+        }.toMap)
+    }
+  }
+
+  /** A fixed set of files as a file index: no partition columns, no
+    * listing, nothing to refresh. */
+  private final case class ManifestIndex(root: Path, files: Seq[FileStatus])
+      extends FileIndex {
+    def rootPaths: Seq[Path] = Seq(root)
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty,
+        files.map(FileStatusWithMetadata(_))))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
 }

@@ -293,7 +293,7 @@ class MirrorRunner(spark: SparkSession, cfg: MirrorConfig) {
         graft.cdc.Normalizer.SourceSchemaCol,
         org.apache.spark.sql.types.StringType, nullable = false))
 
-  private val writers: Map[String, (TableConfig, MergeWriter)] =
+  private[mirror] val writers: Map[String, (TableConfig, MergeWriter)] =
     cfg.tableSet.map { case (name, (tc, dir)) =>
       name -> (tc, new MergeWriter(spark, dir, keysOf(tc),
         softDeleteCol = cfg.softDeleteColName,

@@ -37,6 +37,13 @@ class MergeWriterSpec extends SparkSpec {
         r.getAs[Long](RawTable.Version), r.getAs[Boolean](RawTable.IsDeleted))
     }.toMap
 
+  /** `df` holds exactly the rows of `want`: no key twice, none missing. */
+  private def exactly(df: DataFrame,
+      want: Map[Long, (String, Any, Long, Boolean)]): Unit = {
+    assert(df.count() == want.size, "duplicate or missing keys")
+    assert(rows(df) == want)
+  }
+
   test("merge: insert, update, toast-coalesce, delete; idempotent replay") {
     val path = tmpDir("merge")
     val w = new MergeWriter(spark, s"$path/t", Seq("id"))
@@ -141,60 +148,126 @@ class MergeWriterSpec extends SparkSpec {
 
   test("a growth cut short by a crash is finished or dropped on next use") {
     val path = tmpDir("merge-crash")
-    val w = new MergeWriter(spark, s"$path/t", Seq("id"))
+    val keys = spark.range(1, 121).toDF("id")
     val growing = changes((50 to 60).map(i =>
       (i.toLong, s"u$i", (i * 10).toLong, 2L, false, Seq.empty[String])): _*)
-    val (pre, post, small, grown) = withConf(OpenCost -> "1") {
-      w.merge(inserts(100))
-      val small = state(w)
-      copyTree(s"$path/t", s"$path/pre")
-      w.merge(growing)
-      copyTree(s"$path/t", s"$path/post")
-      (s"$path/pre", s"$path/post", small, state(w))
-    }
-    val postBuckets = bucketDirNames(post)
-    assert(layoutCount(pre) == 1 && layoutCount(post) == 64)
-    assert(grown != small)
+    withConf(OpenCost -> "1") {
+      val small = s"$path/small"
+      new MergeWriter(spark, small, Seq("id")).merge(inserts(100))
+      val grown = s"$path/grown"
+      copyTree(small, grown)
+      new MergeWriter(spark, grown, Seq("id")).merge(growing)
+      assert(layoutCount(small) == 1 && layoutCount(grown) == 64)
+      // A steady merge at 64 that hard-deletes every key of one bucket.
+      val emptied = rows(inserts(100)).keys.filter(at64(_) == at64(1L))
+      val kept = (2L to 100L).find(at64(_) != at64(1L)).get
+      val deleting = changes(emptied.toSeq.map(i =>
+        (i, null, null, 3L, true, Seq.empty[String])) :+
+        ((kept, "y", 7L: Any, 3L, false, Seq.empty[String])): _*)
 
-    /** A copy of the pre-growth table with a stage built from the grown
-      * layout: `staged` of its bucket dirs, and `moved` of them already in
-      * the table. */
-    def crashed(name: String, committed: Boolean, oldRemoved: Boolean,
-        staged: Seq[String], moved: Seq[String]): String = {
-      val t = s"$path/$name"
-      copyTree(pre, t)
-      if (oldRemoved) bucketDirNames(t).foreach(b => deleteTree(s"$t/$b"))
-      staged.foreach(b => copyTree(s"$post/$b", s"$t/_g_grow/$b"))
-      moved.foreach(b => copyTree(s"$post/$b", s"$t/$b"))
-      new java.io.File(s"$t/_g_grow").mkdirs()
-      if (committed) new java.io.File(s"$t/_g_grow/_SUCCESS").createNewFile()
-      if (oldRemoved)
-        new java.io.File(s"$t/_g_grow/_old_removed").createNewFile()
-      t
+      Seq((small, growing, false), (grown, deleting, true)).foreach {
+        case (base, batch, hard) =>
+          val old = state(new MergeWriter(spark, base, Seq("id")))
+          val ref = s"$base-ref"
+          copyTree(base, ref)
+          val refWriter = new MergeWriter(spark, ref, Seq("id"))
+          refWriter.merge(batch, hardDelete = hard)
+          val merged = state(refWriter)
+          assert(merged != old)
+          Seq(MergeWriter.Written, MergeWriter.Committed,
+              MergeWriter.Cleaned).foreach { step =>
+            val t = s"$base-$step"
+            copyTree(base, t)
+            val w = new MergeWriter(spark, t, Seq("id"))
+            w.stepHook = s => if (s == step) throw new Crash
+            intercept[Crash](w.merge(batch, hardDelete = hard))
+            // a new process reads the version the crash left committed
+            val r = new MergeWriter(spark, t, Seq("id"))
+            val want = if (step == MergeWriter.Written) old else merged
+            exactly(r.read(), want)
+            exactly(r.readForKeys(keys), want)
+            // the stream replays the batch it never recorded as done
+            r.merge(batch, hardDelete = hard)
+            exactly(r.read(), merged)
+            assert(storedFiles(t) == r.snapshot.get.files.values
+              .flatMap(_.keySet).toSet, t)
+            assert(bucketDirNames(t).map(_.stripPrefix("_g_bucket=").toInt)
+              .toSet == r.snapshot.get.files.keySet, t)
+          }
+      }
     }
-    val (half, rest) = postBuckets.splitAt(postBuckets.size / 2)
-    val cases = Seq(
-      // crashed while staging: the old layout is intact
-      crashed("staging", committed = false, oldRemoved = false,
-        staged = half, moved = Nil) -> small,
-      // committed, crashed before anything was published
-      crashed("committed", committed = true, oldRemoved = false,
-        staged = postBuckets, moved = Nil) -> grown,
-      // committed, crashed halfway through moving the staged buckets
-      crashed("moving", committed = true, oldRemoved = true,
-        staged = rest, moved = half) -> grown)
-    cases.foreach { case (t, want) =>
-      val r = new MergeWriter(spark, t, Seq("id"))
-      assert(state(r) == want, t)
-      assert(!new java.io.File(s"$t/_g_grow").exists(), t)
-      val keys = spark.range(45, 66).toDF("id")
-      assert(rows(r.readForKeys(keys)) == want.filter(k => k._1 >= 45 &&
-        k._1 <= 65), t)
-      // the stream replays the batch it never recorded as done
-      withConf(OpenCost -> "1")(r.merge(growing))
-      assert(state(r) == grown, t)
-      assert(bucketDirNames(t) == postBuckets, t)
+  }
+
+  test("readers at every step of a merge see the last committed version") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val t = s"${tmpDir("merge-readers")}/t"
+    val w = new MergeWriter(spark, t, Seq("id"))
+    val keys = spark.range(1, 121).toDF("id")
+    val growing = (50 to 60).map(i =>
+      (i.toLong, s"u$i", (i * 10).toLong: Any, 2L, false, Seq.empty[String]))
+    val steady = (1 to 5).map(i =>
+      (i * 20L, s"s$i", i.toLong: Any, 3L, false, Seq.empty[String]))
+    val emptied = rows(inserts(100)).keys.filter(at64(_) == at64(1L))
+    val deleting = emptied.toSeq.map(i =>
+      (i, null: String, null: Any, 4L, true, Seq.empty[String]))
+    withConf(OpenCost -> "1") {
+      w.merge(inserts(100))
+      var expected = state(w)
+      Seq((growing, false), (steady, false), (deleting, true)).foreach {
+        case (batch, hard) =>
+          val next = expected -- batch.filter(_._5).map(_._1) ++
+            batch.filterNot(_._5).map(r => r._1 -> (r._2, r._3, r._4, r._5))
+          val at = new java.util.concurrent.SynchronousQueue[MergeWriter.Step]
+          val go = new java.util.concurrent.Semaphore(0)
+          w.stepHook = s =>
+            if (s != MergeWriter.Begin) { at.put(s); go.acquire() }
+          val merging = Future(w.merge(changes(batch: _*), hardDelete = hard))
+          Seq(MergeWriter.Written, MergeWriter.Committed,
+              MergeWriter.Cleaned).foreach { step =>
+            assert(at.poll(60, java.util.concurrent.TimeUnit.SECONDS) == step)
+            val want = if (step == MergeWriter.Written) expected else next
+            exactly(new MergeWriter(spark, t, Seq("id")).read(), want)
+            exactly(w.read(), want)
+            exactly(w.readForKeys(keys), want)
+            go.release()
+          }
+          Await.result(merging, 60.seconds)
+          w.stepHook = _ => ()
+          expected = next
+          // plain parquet readers see exactly the live rows
+          exactly(spark.read.parquet(t).drop("_g_bucket"), expected)
+      }
     }
+    assert(layoutCount(t) == 64)
+
+    // Reads of a 64-bucket table list nothing. Listing its directory
+    // passes the 32-path parallel-discovery threshold and costs one more
+    // job per read: 3 and 6 jobs when reads listed the table.
+    val sc = spark.sparkContext
+    val group = "merge-reader-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Long): Int = {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBus.drain(sc)
+      jobs.get()
+    }
+    sc.addSparkListener(l)
+    val (readJobs, keyedJobs) = try (jobsOf(w.read().count()),
+      jobsOf(w.readForKeys(spark.range(1, 21).toDF("id")).count()))
+    finally sc.removeSparkListener(l)
+    info(s"jobs: read().count() $readJobs, readForKeys(k).count() $keyedJobs")
+    assert(readJobs <= 2 && keyedJobs <= 5)
   }
 
   test("hard deletes that empty the upper buckets leave a working layout") {
@@ -294,6 +367,19 @@ class MergeWriterSpec extends SparkSpec {
 
   private val OpenCost = "spark.sql.files.openCostInBytes"
 
+  private class Crash extends RuntimeException("crash")
+
+  /** Bucket of each of the keys 1-300 at 64 buckets. */
+  private lazy val at64: Map[Long, Int] = spark.range(1, 301)
+    .select(col("id"), pmod(hash(col("id")), lit(64)))
+    .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  /** Data files under the bucket directories, relative to the table. */
+  private def storedFiles(path: String): Set[String] =
+    bucketDirNames(path).flatMap(b => new java.io.File(s"$path/$b").list()
+      .filterNot(f => f.startsWith(".") || f.startsWith("_"))
+      .map(f => s"$b/$f")).toSet
+
   private def bucketMtimes(path: String): Map[String, Long] = {
     val d = new java.io.File(path)
     d.listFiles().filter(_.getName.startsWith("_g_bucket=")).map { f =>
@@ -328,12 +414,5 @@ class MergeWriterSpec extends SparkSpec {
         java.nio.file.Files.createDirectories(q)
       else java.nio.file.Files.copy(p, q)
     } finally all.close()
-  }
-
-  private def deleteTree(path: String): Unit = {
-    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-    try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(java.nio.file.Files.delete(_))
-    finally all.close()
   }
 }

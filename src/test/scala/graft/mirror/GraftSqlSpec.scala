@@ -162,9 +162,10 @@ class GraftSqlSpec extends SparkSpec {
       // from the checkpoint (picks up the resync-era append), pause stops
       // intake; a second resume continues loss-free.
       s.sql("RESUME MIRROR m_test")
-      // The poll races the merge's dynamic partition overwrite (files can
-      // vanish between listing and read) — a transient read failure just
-      // means "in flux", retry.
+      // The poll lists the directory while merges run (a merge's new
+      // files sit beside the ones they supersede until its cleanup
+      // deletes them) — a transient read failure just means "in flux",
+      // retry.
       def destCount(): Long =
         try s.read.parquet(s"$base/dest").filter("NOT _peerdb_is_deleted")
           .count()

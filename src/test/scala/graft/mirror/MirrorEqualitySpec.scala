@@ -3,7 +3,7 @@ package graft.mirror
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.cdc.ChangeLogWal
+import graft.cdc.{ChangeLogWal, MergeWriter}
 import graft.model.ChangeRecord
 
 /** The reference's primary oracle restated (EnvWaitForEqualTablesWithNames,
@@ -312,6 +312,65 @@ class MirrorEqualitySpec extends SparkSpec {
     val out = runner.destination().collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("extra")).toMap
     assert(out == Map(3L -> null, 4L -> null, 5L -> null, 6L -> "x"))
+  }
+
+  test("a crash at any step of a batch's merge replays to the fold") {
+    // Three transactions, one micro-batch each: inserts, then updates,
+    // deletes and new keys, then a delete, a reinsert and more updates.
+    val txs = Seq(
+      (1L to 30L).map(i => (ChangeRecord.TypeInsert, i, s"n$i")),
+      (1L to 10L).map(i => (ChangeRecord.TypeUpdate, i, s"u$i")) ++
+        (11L to 15L).map(i => (ChangeRecord.TypeDelete, i, null)) ++
+        (31L to 40L).map(i => (ChangeRecord.TypeInsert, i, s"n$i")),
+      Seq((ChangeRecord.TypeDelete, 31L, null),
+        (ChangeRecord.TypeInsert, 12L, "again")) ++
+        (5L to 8L).map(i => (ChangeRecord.TypeUpdate, i, s"w$i")))
+    var cp = 0L
+    val records = txs.zipWithIndex.flatMap { case (ops, tx) =>
+      ops.map { case (rt, id, name) =>
+        cp += 1
+        if (rt == ChangeRecord.TypeDelete)
+          rec(cp, tx + 1, rt, null, s"""{"id":$id}""")
+        else if (rt == ChangeRecord.TypeInsert)
+          rec(cp, tx + 1, rt, s"""{"id":$id,"name":"$name","v":$cp}""")
+        else rec(cp, tx + 1, rt, s"""{"id":$id,"name":"$name","v":$cp}""",
+          s"""{"id":$id}""")
+      }
+    }
+    val fold = txs.flatten.foldLeft(Map.empty[Long, String]) {
+      case (m, (rt, id, name)) =>
+        if (rt == ChangeRecord.TypeDelete) m - id else m + (id -> name)
+    }
+    def names(df: org.apache.spark.sql.DataFrame) = df.select("id", "name")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+    Seq(MergeWriter.Begin, MergeWriter.Written, MergeWriter.Committed,
+        MergeWriter.Cleaned).foreach { step =>
+      val base = tmpDir(s"mirrorcrash$step")
+      val cfg = MirrorConfig(s"$base/wal", s"$base/raw", s"$base/dest",
+        s"$base/ckpt", Seq("id"), payloadSchema, destinationTable = "dest.t",
+        maxBatchSize = 1)
+      ChangeLogWal.append(cfg.walDir, records)
+      // Batch 2's merge dies at `step`. Begin is after its raw append and
+      // high-water mark, before the merge writes anything.
+      val crashing = new MirrorRunner(spark, cfg)
+      var merges = 0
+      crashing.writers("dest.t")._2.stepHook = s => {
+        if (s == MergeWriter.Begin) merges += 1
+        if (merges == 2 && s == step) throw new IllegalStateException("crash")
+      }
+      intercept[Exception](crashing.runAvailableNow())
+      assert(merges == 2, step)
+
+      val runner = new MirrorRunner(spark, cfg)
+      runner.runAvailableNow()
+      assert(names(runner.destination()) == fold, step)
+      val lastBatch = spark.read.parquet(cfg.rawDir)
+        .agg(org.apache.spark.sql.functions.max(
+          graft.model.RawTable.BatchId)).head().getAs[Number](0).longValue()
+      assert(lastBatch == 2L, step)
+      assert(names(runner.destinationAsOf(lastBatch)) == fold, step)
+    }
   }
 
   test("raw sync replay is idempotent (batch partition overwrite)") {

@@ -2,8 +2,10 @@
 """Compare two Bench outputs, per query.
 
 Wall time: two Bench JSON lines (raw {"metric":...} lines, BENCH_out.json,
-or a BENCH_r{N}.json wrapper holding the line in its "tail" field):
-per-query deltas, regressions first.
+or a BENCH_r{N}.json wrapper holding the end of the line in its "tail"
+field, of which only the whole "q_...":seconds pairs are used): per-query
+deltas, regressions first, with the number of queries compared and
+skipped.
 
 Structure: two files Bench's structural pass wrote under bench-structure/:
 per-query deltas in jobs, stages, exchanges and shuffle bytes, increases
@@ -34,11 +36,14 @@ def load(path):
     d = json.loads(text)
     if "queries" in d:
         return d["queries"]
-    # driver wrapper: queries JSON embedded in the "tail" field
-    m = re.search(r'"queries":(\{[^}]*\})', d.get("tail", ""))
-    if not m:
+    # driver wrapper: the "tail" field is the last characters of the run's
+    # output and usually starts mid-line, so keep the whole
+    # "q_...":seconds pairs it does hold
+    pairs = re.findall(r'"(q_\w+)":(-?[0-9][0-9.eE+-]*)[,}]', d.get("tail", ""))
+    if not pairs:
         sys.exit(f"no queries found in {path}")
-    return json.loads(m.group(1))
+    print(f"{path}: tail holds {len(pairs)} whole query timings")
+    return {q: float(v) for q, v in pairs}
 
 
 def diff_structure(a, old, new):
@@ -88,8 +93,9 @@ def main():
     if kinds == {True}:
         sys.exit(diff_structure(a, old, new))
     common = sorted(set(old) & set(new), key=lambda k: old[k] - new[k])
-    print(f"common {len(common)}  only-old {len(set(old)-set(new))}  "
-          f"only-new {len(set(new)-set(old))}")
+    print(f"compared {len(common)} queries, skipped "
+          f"{len(set(old) ^ set(new))} (only-old {len(set(old)-set(new))}  "
+          f"only-new {len(set(new)-set(old))})")
     print(f"totals: old={sum(old.values()):.1f}s new={sum(new.values()):.1f}s "
           f"(common subset: {sum(old[k] for k in common):.1f} -> "
           f"{sum(new[k] for k in common):.1f})")
